@@ -108,6 +108,13 @@ object Bench {
       .withDefaultValue(0.0)
     val spillMb = scala.collection.mutable.Map.empty[String, Double]
       .withDefaultValue(0.0)
+    // Janino compilations per query per pass (query_codegen_compiles):
+    // Spark's codegen cache holds 100 entries, so a suite that generates
+    // more recompiles in EVERY pass — cache thrash, visible as data.
+    // Read outside t0..t1, like the shuffle/spill counters.
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val codegenCompiles = scala.collection.mutable.Map.empty[String, Vector[Long]]
+      .withDefaultValue(Vector.empty)
     // Optional comma-separated subset (hotspot iteration); default = all.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -182,7 +189,7 @@ object Bench {
         if (order.size >= 2 && i == order.size / 2) sent += sentinelOnce()
         sweep()
         drainBus()
-        val (sh0, sp0) = (shuffleAcc.get(), spillAcc.get())
+        val (sh0, sp0, cg0) = (shuffleAcc.get(), spillAcc.get(), compiles.getCount)
         val t0 = System.nanoTime()
         try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
@@ -190,6 +197,7 @@ object Bench {
             s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
         }
         samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
+        codegenCompiles(name) = codegenCompiles(name) :+ (compiles.getCount - cg0)
         drainBus()
         shuffleMb(name) = math.max(shuffleMb(name),
           (shuffleAcc.get() - sh0) / 1048576.0)
@@ -320,7 +328,9 @@ object Bench {
       .mkString("{", ",", "}")
     val qsSpill = ok.map { case (k, _, _) => s"${jstr(k)}:${r4(spillMb(k))}" }
       .mkString("{", ",", "}")
-    val full = s"""{"metric":"total",$core,"queries":$qs,"errors":$errs,"sentinel":$sentJson,"samples":$samplesJson,"queries_calibrated":$qsCal,"query_sentinel_ratio":$qsRatio,"query_shuffle_mb":$qsShuffle,"query_spill_mb":$qsSpill}"""
+    val qsCompiles = ok.map { case (k, _, _) => s"${jstr(k)}:${codegenCompiles(k).mkString("[", ",", "]")}" }
+      .mkString("{", ",", "}")
+    val full = s"""{"metric":"total",$core,"queries":$qs,"errors":$errs,"sentinel":$sentJson,"samples":$samplesJson,"queries_calibrated":$qsCal,"query_sentinel_ratio":$qsRatio,"query_shuffle_mb":$qsShuffle,"query_spill_mb":$qsSpill,"query_codegen_compiles":$qsCompiles}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     Files.writeString(Paths.get(outFile), full + "\n")
     println(compact)

@@ -102,7 +102,7 @@ object Similarity extends QueryModule {
   // ------------------------------------------------------------ primitives
 
   /** float embedding → exact fixed-point long vector. */
-  private[ops] def quantize(emb: Column): Column =
+  private[graft] def quantize(emb: Column): Column =
     transform(emb.cast("array<double>"), x => floor(x * Scale))
 
   /** Exact integer dot product (sequential fold, but order-independent
@@ -567,6 +567,7 @@ object Similarity extends QueryModule {
     // GraphK = 3, ~128 MB partitions at any scale, single-task loop
     // stages on fixture-sized graphs.
     val n = nodeList.count()
+    if (n == 0) return emptyRanks(nodeList)
     // Repartitioned by src BEFORE the persist (r18, guide §2.4): every
     // round joins edges⋈deg⋈rank on src and deg itself is a groupBy(src),
     // so the cached partitioning satisfies all of them — the edge frame
@@ -600,6 +601,14 @@ object Similarity extends QueryModule {
       .orderBy("vec_id")
   }
 
+  /** The rank frame of an EMPTY node set: zero rows, the recurrence's
+    * schema. The oracle's `... // n` over an empty CTE returns no rows;
+    * the driver-literal recurrence would divide by n = 0 instead.
+    */
+  private def emptyRanks(nodeList: DataFrame): DataFrame =
+    nodeList.select(col("vec_id"), lit(null).cast("double").as("pagerank"))
+      .orderBy("vec_id")
+
   // ---------------------------------------------------- sim_graph_rank_full
 
   /** Standard-formulation PageRank over the [[knnGraph]]: [[graphRank]]
@@ -630,6 +639,7 @@ object Similarity extends QueryModule {
     // n as a driver literal + data-derived edge partitioning — see
     // [[graphRankOf]] (r19)
     val n = nodeList.count()
+    if (n == 0) return emptyRanks(nodeList)
     // src-partitioned before the persist — see [[graphRankOf]] (r18)
     val edges = edgeList
       .repartition(graft.ops.Dedup.adaptiveParts(edgeList, 4L * n), col("src"))
@@ -934,7 +944,7 @@ object Similarity extends QueryModule {
     * sums (order-independent, partial-aggregated map-side), one double
     * division at the end → (c_label, cv).
     */
-  private def centroidsBy(vecs: DataFrame, grp: String): DataFrame =
+  private[graft] def centroidsBy(vecs: DataFrame, grp: String): DataFrame =
     vecs.select(col(grp).as("g"), posexplode(col("vq")).as(Seq("pos", "v")))
       .groupBy("g", "pos")
       .agg(sum("v").as("sv"), count(lit(1)).as("cnt"))
@@ -949,7 +959,7 @@ object Similarity extends QueryModule {
     * in both engines — deterministic (array_dot reproduces the HOF fold's
     * sequential IEEE order exactly).
     */
-  private def scoreAgainst(e: DataFrame, cent: DataFrame): DataFrame = {
+  private[graft] def scoreAgainst(e: DataFrame, cent: DataFrame): DataFrame = {
     val dot = call_function("array_dot", col("vq").cast("array<double>"), col("cv"))
     val cn2 = call_function("array_dot", col("cv"), col("cv"))
     e.join(broadcast(cent))
@@ -1421,37 +1431,78 @@ object Similarity extends QueryModule {
     * between — assign under the label-seeded centroids, refit from the new
     * clusters, re-assign. Emits the final per-vector cluster + cosine.
     *
-    * Scale shape per round: centroids broadcast (|clusters| rows); the
-    * argmax is a map-side-partial max_by hash aggregate; the refit folds
-    * the corpus into |clusters|·Dim integer sufficient statistics. Nothing
-    * driver-side grows with the corpus, and with only a handful of rounds
-    * plan lineage stays trivially bounded (contrast
-    * [[Dedup.labelPropagate]], whose unbounded loop needs localCheckpoint).
+    * Scale shape: the loop state lives on the DRIVER, the way a distributed
+    * Lloyd trainer runs. The quantized corpus `(vec_id, label, vq)` is the
+    * loop-invariant frame, persisted once. Each refit is ONE aggregate — the
+    * exact integer sufficient statistics `sum(v), count(*)` per
+    * (group, pos), partial-aggregated map-side — collected to the driver:
+    * |labels|·[[Dim]] rows per round, independent of corpus size. The
+    * driver divides `sv.toDouble / cnt` (the oracle's correctly-rounded
+    * `sv::DOUBLE / cnt`) and the centroids re-enter the plan as literals,
+    * so the next assignment is a ROW-WISE column — a `greatest` over one
+    * `struct(cos, -label, label)` per centroid — with no join, no
+    * broadcast and no argmax shuffle; the struct order is the oracle's
+    * `cos DESC, c_label ASC` ranking. The assignment is projected
+    * in its own select BEFORE the posexplode that feeds the next refit:
+    * sharing the generator's select lets the optimizer evaluate the
+    * K-way `greatest` after the explode, once per component ([[Dim]]×). K
+    * is bounded by construction — the refit groups are the label-seeded
+    * centroids (≤ 10 labels) or the non-empty subset of them — so the
+    * literal centroid set stays a few kB. The persisted frame is released
+    * before the lazy final assignment is returned; nothing stays cached.
+    * An input with no vector components (an empty table) has no centroid
+    * and yields zero rows, as the oracle does.
     */
   def kmeansTrain(s: SparkSession, dir: String): DataFrame = {
     graft.functions.ArrayDot.register(s)
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), quantize(col("embedding")).as("vq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eLab = Tables.embeddings(s, dir)
-      .select(col("label"), quantize(col("embedding")).as("vq"))
-    def assignUnder(cent: DataFrame): DataFrame =
-      scoreAgainst(e, cent)
-        .groupBy("vec_id")
-        .agg(max_by(
-          struct(col("c_label"), col("cos")),
-          struct(col("cos"), (-col("c_label")).as("neg"))).as("best"),
-          first(col("vq")).as("vq"))
-        .select(col("vec_id"), col("vq"),
-          col("best.c_label").as("assigned"), col("best.cos").as("cos"))
-    // TrainIters assignment rounds ⇒ TrainIters − 1 refits BETWEEN them
-    var asg = assignUnder(centroidsBy(eLab, "label"))
-    for (_ <- 2 to TrainIters)
-      asg = assignUnder(centroidsBy(asg.select(col("assigned"), col("vq")), "assigned"))
-    asg.select(col("vec_id"), col("assigned").as("cluster"),
-        round(col("cos"), 6).as("cos_sim"))
-      .orderBy("vec_id")
-      .transform(Dedup.materializeThenRelease(_, e))
+    def frame = Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("vq"))
+    val e = frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val labelType = e.schema("label").dataType
+    // (group, cv) per non-empty group, sorted so the literal plan — and
+    // the class Spark's codegen cache keys on — is the same every run
+    def refit(grouped: DataFrame): Seq[(Option[Any], Array[Double])] =
+      grouped.select(col("g"), posexplode(col("vq")).as(Seq("pos", "v")))
+        .groupBy("g", "pos")
+        .agg(sum("v").as("sv"), count(lit(1)).as("cnt"))
+        .collect().toSeq
+        .groupBy(r => Option(r.get(0)))
+        .map { case (g, rs) =>
+          g -> rs.sortBy(_.getInt(1)).map(r => r.getLong(2).toDouble / r.getLong(3)).toArray }
+        .toSeq.sortBy(_._1.map(_.toString))
+    // the nearest centroid as struct(cos, neg, label): max cosine, ties to
+    // the smaller label; greatest() needs ≥ 2 arguments
+    def nearest(cents: Seq[(Option[Any], Array[Double])]): Column = {
+      val cands = cents.map { case (g, cv) =>
+        val c = typedLit(cv)
+        val label = lit(g.orNull).cast(labelType)
+        val dot = call_function("array_dot", col("vq").cast("array<double>"), c)
+        val cn2 = call_function("array_dot", c, c)
+        struct(
+          (dot / (sqrt(inorm2(col("vq")).cast("double")) * sqrt(cn2))).as("cos"),
+          (-label).as("neg"), label.as("label"))
+      }
+      if (cands.size == 1) cands.head else greatest(cands: _*)
+    }
+    var cents = refit(e.select(col("label").as("g"), col("vq")))
+    // TrainIters assignment rounds ⇒ TrainIters − 1 refits BETWEEN them.
+    // A vector without components feeds no refit, so its key may be null:
+    // that keeps the key as nullable as the label column, and every refit
+    // shares one set of generated exchange/aggregate/collect classes.
+    if (cents.nonEmpty)
+      for (_ <- 2 to TrainIters)
+        cents = refit(e.select(
+          when(col("vq").isNotNull, nearest(cents).getField("label")).as("g"), col("vq")))
+    e.unpersist(false)
+    val out =
+      if (cents.isEmpty)
+        frame.select(col("vec_id"), lit(null).cast(labelType).as("cluster"),
+          lit(null).cast("double").as("cos_sim")).where(lit(false))
+      else
+        frame.select(col("vec_id"), nearest(cents).as("best"))
+          .select(col("vec_id"), col("best.label").as("cluster"),
+            round(col("best.cos"), 6).as("cos_sim"))
+    out.orderBy("vec_id")
   }
 
   // -------------------------------------------------------- sim_pq_encode

@@ -100,6 +100,95 @@ class OpsSpec extends AnyFunSuite {
       s"trained mean cos $meanTrained well below initial $meanInit")
   }
 
+  /** The relational two-round Lloyd formulation kmeansTrain replaced:
+    * centroids as a two-shuffle subplan ([[Similarity.centroidsBy]]),
+    * broadcast-scored ([[Similarity.scoreAgainst]]), the argmax a max_by
+    * aggregate per vector. The reference the driver-side loop must match
+    * bit for bit.
+    */
+  private def kmeansTrainRelational(d: String): org.apache.spark.sql.DataFrame = {
+    graft.functions.ArrayDot.register(spark)
+    val emb = Tables.embeddings(spark, d)
+    val e = emb.select(col("vec_id"), Similarity.quantize(col("embedding")).as("vq"))
+    def assignUnder(cent: org.apache.spark.sql.DataFrame) =
+      Similarity.scoreAgainst(e, cent)
+        .groupBy("vec_id")
+        .agg(max_by(
+          struct(col("c_label"), col("cos")),
+          struct(col("cos"), (-col("c_label")).as("neg"))).as("best"),
+          first(col("vq")).as("vq"))
+        .select(col("vec_id"), col("vq"),
+          col("best.c_label").as("assigned"), col("best.cos").as("cos"))
+    val asg1 = assignUnder(Similarity.centroidsBy(
+      emb.select(col("label"), Similarity.quantize(col("embedding")).as("vq")), "label"))
+    assignUnder(Similarity.centroidsBy(asg1.select(col("assigned"), col("vq")), "assigned"))
+      .select(col("vec_id"), col("assigned").as("cluster"), round(col("cos"), 6).as("cos_sim"))
+      .orderBy("vec_id")
+  }
+
+  /** A copy of the sf0.001 fixture in a fresh temp dir whose `embeddings`
+    * table is `f` of the original; every other table is linked unchanged.
+    */
+  private def withEmbeddings(tag: String)(f: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame)(body: String => Unit): Unit = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft-$tag")
+    try {
+      for (t <- Tables.names if t != "embeddings")
+        java.nio.file.Files.createSymbolicLink(d.resolve(s"$t.parquet"),
+          java.nio.file.Paths.get(s"$dir/$t.parquet").toAbsolutePath)
+      f(Tables.embeddings(spark, dir)).write.parquet(d.resolve("embeddings.parquet").toString)
+      body(d.toString)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
+  }
+
+  /** Rows with doubles compared by bit pattern (NaN-safe, -0.0 ≠ 0.0). */
+  private def exactRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case x: Double => java.lang.Double.doubleToRawLongBits(x)
+      case x => x
+    })
+
+  test("sim_kmeans_train: driver-side Lloyd loop is bit-identical to the relational formulation") {
+    val got = Similarity.kmeansTrain(spark, dir)
+    val ref = kmeansTrainRelational(dir)
+    assert(got.schema.map(f => f.name -> f.dataType) === ref.schema.map(f => f.name -> f.dataType))
+    val rows = exactRows(got)
+    assert(rows.length === Tables.embeddings(spark, dir).count())
+    assert(rows === exactRows(ref))
+  }
+
+  test("sim_kmeans_train: degenerate inputs match the relational formulation") {
+    val labelType = Tables.embeddings(spark, dir).schema("label").dataType
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      // no rows → no centroid: greatest() would have no argument at all
+      "empty" -> (_.limit(0)),
+      // one label → one centroid: greatest() needs two, the struct stands alone
+      "one-label" -> (_.withColumn("label", lit(3).cast(labelType))),
+      // the null label is a centroid of its own; it loses every cosine tie
+      "null-labels" -> (_.withColumn("label",
+        when(col("vec_id") % 3 === 0, lit(null).cast(labelType)).otherwise(col("label")))),
+      "all-null-labels" -> (_.withColumn("label", lit(null).cast(labelType))),
+      // one vector everywhere: every centroid ties, the smallest label wins
+      "identical-vectors" -> (e => e.drop("embedding")
+        .crossJoin(e.orderBy("vec_id").select("embedding").limit(1))))
+    for ((tag, f) <- cases) withEmbeddings(tag)(f) { d =>
+      val got = exactRows(Similarity.kmeansTrain(spark, d))
+      assert(got === exactRows(kmeansTrainRelational(d)), tag)
+      assert(got.length === Tables.embeddings(spark, d).count(), tag)
+    }
+  }
+
+  test("sim_graph_rank(+full): an empty embeddings table ranks zero nodes, no division by zero") {
+    val full = Seq(Similarity.graphRank(spark, dir), Similarity.graphRankFull(spark, dir))
+    withEmbeddings("empty")(_.limit(0)) { d =>
+      for ((out, ref) <- Seq(Similarity.graphRank(spark, d), Similarity.graphRankFull(spark, d))
+          .zip(full)) {
+        assert(out.schema === ref.schema)
+        assert(out.collect().isEmpty)
+      }
+    }
+  }
+
   test("sim_ivf_topk: probing 3 of 10 lists recovers a sane share of brute-force truth") {
     import spark.implicits._
     val ivf = Similarity.ivfTopK(spark, dir)

@@ -16,13 +16,15 @@ class PlanShapeSpec extends AnyFunSuite {
   /** Queries whose plans intentionally contain a BroadcastNestedLoopJoin
     * against a side that is SMALL BY CONSTRUCTION (not merely small at this
     * SF): the ≤ 10-row centroid/codebook tables (sim_*), and the 1-row
-    * threshold scalar (ev_range_join).
+    * threshold scalar (ev_range_join). sim_kmeans_train is NOT here: its
+    * centroids are driver-side literals scored row-wise, so no join of any
+    * kind remains in its plan.
     */
   private val bnljByDesign = Set(
     "sim_brute_topk", "sim_lsh_topk", // broadcast 8-query set joins are equi,
     //                                   but the scored cross with queries is
     //                                   a non-equi (=!=) bounded broadcast
-    "sim_ivf_assign", "sim_ivf_topk", "sim_kmeans_step", "sim_kmeans_train",
+    "sim_ivf_assign", "sim_ivf_topk", "sim_kmeans_step",
     "sim_cluster_purity", // same bounded centroid-broadcast subtree as ivf_assign
     "sim_silhouette", // same bounded centroid-broadcast subtree as ivf_assign
     "sim_ivf_balance", // same bounded centroid-broadcast subtree as ivf_assign
@@ -204,6 +206,30 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"exact-percentile aggregate over an unbounded domain in: ${offenders.mkString(", ")}")
+  }
+
+  test("sim_kmeans_train: build + noop write runs in at most 10 jobs and leaves nothing cached") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      graft.ops.Similarity.kmeansTrain(spark, dir).write.format("noop").mode("overwrite").save()
+      // job-start events ride the async listener bus: drain it before
+      // reading (waitUntilEmpty is private[spark] in source, public in
+      // bytecode)
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethods
+        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0).get.invoke(bus)
+    } finally spark.sparkContext.removeSparkListener(counter)
+    // two refit aggregates collected to the driver plus the sorted write
+    assert(jobs.get <= 10, s"${jobs.get} jobs")
+    val cached = spark.sparkContext.getPersistentRDDs
+    assert(cached.isEmpty, cached.values.map(_.name).mkString("; "))
   }
 
   test("no cartesian products anywhere; nested-loop joins only where bounded by design") {
