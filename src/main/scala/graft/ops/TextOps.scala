@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryModule, Tables}
 import graft.core.MapReduce.WhitespaceClass
+import graft.functions.Winnow
 
 /** Text-analysis battery over the `documents` table: tokenization, token
   * statistics, term frequencies, n-grams, quality scoring, language-ID
@@ -408,75 +409,45 @@ object TextOps extends QueryModule {
       .orderBy("doc_id")
   }
 
-  private val WinK = 5 // winnowing shingle width (tokens)
-  private val WinW = 4 // winnowing window (consecutive shingle hashes)
-  private val WinPosBits = 21 // pos packs below the hash; docs < 2^21 shingles
-
   /** Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, SIGMOD'03 —
-    * the MOSS local-fingerprint algorithm): from the [[WinK]]-token shingle
-    * hash sequence, every window of [[WinW]] consecutive hashes selects its
-    * minimum (rightmost on ties — "robust winnowing"), and the distinct
-    * selections are the document's fingerprints. Guarantee: any token run of
-    * ≥ WinW + WinK − 1 tokens shared by two documents shares at least one
-    * fingerprint — position-local (unlike MinHash's whole-document
-    * signature) with expected density 2/(WinW+1) instead of all shingles.
+    * the MOSS local-fingerprint algorithm): from the K-token shingle hash
+    * sequence, every window of W consecutive hashes selects its minimum
+    * (rightmost on ties — "robust winnowing"), and the distinct selections
+    * are the document's fingerprints (K, W and the position packing are
+    * [[graft.functions.Winnow]]'s). Guarantee: any token run of ≥ W + K − 1
+    * tokens shared by two documents shares at least one fingerprint —
+    * position-local (unlike MinHash's whole-document signature) with
+    * expected density 2/(W+1) instead of all shingles.
     *
-    * Fully relational: tokens posexplode once; shingle hashes come from one
-    * codegen'd md5 projection over lead() windows partitioned on the
-    * high-cardinality doc_id (the txt_repetition shape); the rightmost-min
+    * Scale shape: map-only up to the final sort. Every statistic is per
+    * doc_id, and a reduce keyed by the record's own key needs no shuffle:
+    * the native [[graft.functions.Winnow]] expression winnows each document
+    * inside one codegen'd projection over its token array, in O(tokens of
+    * one doc) memory. The only exchange is the presentation orderBy's range
+    * partitioning, which carries one fixed-width row per document — no
+    * token rows, no window, no distinct, no join back. The rightmost-min
     * tie-break packs (hash, reversed pos) into one BIGINT — h·2^21 fits in
-    * 53 bits, exact in both engines — so window min() implements the argmin;
-    * the per-doc distinct and aggregate reuse the window's
-    * hashpartitioning(doc_id) (no extra exchange). Short docs (fewer than
-    * WinW shingles) winnow their single truncated window, so every doc with
-    * ≥ 1 shingle yields ≥ 1 fingerprint; docs under WinK tokens report
-    * zeros. fp_checksum (exact BIGINT sum of selected hashes) pins the
-    * selected set itself under the driver's hash-compare.
+    * 53 bits, exact in both engines — so docs must stay under 2^21
+    * shingles. Short docs (fewer than W shingles) winnow their single
+    * truncated window, so every doc with ≥ 1 shingle yields ≥ 1
+    * fingerprint; docs under K tokens (and null text) report zeros.
+    * fp_checksum (exact BIGINT sum of selected hashes) pins the selected
+    * set itself under the driver's hash-compare.
     */
   def winnowing(s: SparkSession, dir: String): DataFrame =
     winnowingOf(Tables.documents(s, dir))
 
-  /** Distinct winnowing selections: (doc_id, n_sh, sel) where sel packs
-    * (hash << WinPosBits) | reversed-pos — decode h = sel >> WinPosBits.
-    */
-  private[graft] def winnowSelections(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val leads = (2 to WinK).map(i => lead("t", i - 1).over(w).as(s"t$i"))
-    val sh = docs
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
-      .select(col("doc_id") +: col("pos") +: col("t") +: leads: _*)
-      .filter(col(s"t$WinK").isNotNull) // shingle starts: pos = 0..n_sh-1
-      .select(col("doc_id"), col("pos"),
-        conv(substring(md5(concat_ws(" ",
-          col("t") +: (2 to WinK).map(i => col(s"t$i")): _*)), 1, 8), 16, 10)
-          .cast("long").as("h"))
-    val win = w.rowsBetween(Window.currentRow, WinW - 1)
-    sh
-      .withColumn("key",
-        shiftleft(col("h"), WinPosBits)
-          + (lit((1L << WinPosBits) - 1) - col("pos")))
-      .withColumn("n_sh", count(lit(1)).over(Window.partitionBy("doc_id")))
-      .withColumn("sel", min(col("key")).over(win))
-      // valid window starts; max(n_sh - WinW, 0) keeps ONE truncated window
-      // for docs with fewer than WinW shingles
-      .filter(col("pos") <= greatest(col("n_sh") - WinW, lit(0L)))
-      .select(col("doc_id"), col("n_sh"), col("sel"))
-      .distinct()
-  }
-
   private[graft] def winnowingOf(docs: DataFrame): DataFrame = {
-    val agg = winnowSelections(docs).groupBy("doc_id")
-      .agg(max(col("n_sh")).as("n_shingles"),
-        count(lit(1)).as("n_fp"),
-        sum(shiftright(col("sel"), WinPosBits)).as("fp_checksum"))
-    docs.select("doc_id").join(agg, Seq("doc_id"), "left")
+    Winnow.register(docs.sparkSession)
+    docs
+      .select(col("doc_id"), call_function("winnow", tokens(col("text"))).as("w"))
       .select(col("doc_id"),
-        coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-        coalesce(col("n_fp"), lit(0L)).as("n_fp"),
-        when(coalesce(col("n_shingles"), lit(0L)) === 0, lit(0.0))
-          .otherwise(round(col("n_fp").cast("double") / col("n_shingles"), 4))
+        col("w.n_shingles").as("n_shingles"),
+        col("w.n_fp").as("n_fp"),
+        when(col("w.n_shingles") === 0, lit(0.0))
+          .otherwise(round(col("w.n_fp").cast("double") / col("w.n_shingles"), 4))
           .as("fp_density"),
-        coalesce(col("fp_checksum"), lit(0L)).as("fp_checksum"))
+        col("w.fp_checksum").as("fp_checksum"))
       .orderBy("doc_id")
   }
 
@@ -3084,20 +3055,20 @@ object TextOps extends QueryModule {
       s"""WITH t AS (
          |  SELECT doc_id, $toksSql AS toks FROM documents
          |), s AS (
-         |  SELECT doc_id, len(toks) - ${WinK - 1} AS n_sh,
-         |    list_apply(range(1, len(toks) - ${WinK - 2}),
+         |  SELECT doc_id, len(toks) - ${Winnow.K - 1} AS n_sh,
+         |    list_apply(range(1, len(toks) - ${Winnow.K - 2}),
          |      i -> ('0x' || substr(md5(toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]
          |        || ' ' || toks[i + 3] || ' ' || toks[i + 4]), 1, 8))::BIGINT) AS hs
-         |  FROM t WHERE len(toks) >= $WinK
+         |  FROM t WHERE len(toks) >= ${Winnow.K}
          |), k AS (
          |  SELECT doc_id, n_sh,
          |    list_apply(range(1, len(hs) + 1),
-         |      i -> (hs[i] << $WinPosBits) + (${(1L << WinPosBits) - 1} - (i - 1))) AS keys
+         |      i -> (hs[i] << ${Winnow.PosBits}) + (${(1L << Winnow.PosBits) - 1} - (i - 1))) AS keys
          |  FROM s
          |), sel AS (
          |  SELECT doc_id, n_sh,
-         |    list_distinct(list_apply(range(1, greatest(len(keys) - ${WinW - 1}, 1) + 1),
-         |      i -> list_min(list_slice(keys, i, i + ${WinW - 1})))) AS sels
+         |    list_distinct(list_apply(range(1, greatest(len(keys) - ${Winnow.W - 1}, 1) + 1),
+         |      i -> list_min(list_slice(keys, i, i + ${Winnow.W - 1})))) AS sels
          |  FROM k
          |)
          |SELECT d.doc_id,
@@ -3105,7 +3076,7 @@ object TextOps extends QueryModule {
          |  coalesce(len(sel.sels), 0)::BIGINT AS n_fp,
          |  CASE WHEN sel.n_sh IS NULL THEN 0.0
          |    ELSE round(len(sel.sels)::DOUBLE / sel.n_sh, 4) END AS fp_density,
-         |  coalesce(list_sum(list_apply(sel.sels, x -> x >> $WinPosBits)), 0)::BIGINT
+         |  coalesce(list_sum(list_apply(sel.sels, x -> x >> ${Winnow.PosBits})), 0)::BIGINT
          |    AS fp_checksum
          |FROM documents d LEFT JOIN sel ON d.doc_id = sel.doc_id
          |ORDER BY d.doc_id""".stripMargin)

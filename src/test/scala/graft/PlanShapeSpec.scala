@@ -1,5 +1,14 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Standing anti-pattern gate over EVERY registered query's physical plan:
@@ -9,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * accidentally plans a product (a dropped join key, a non-equi condition
   * Spark can't hash) fails CI instead of the bench.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 
@@ -208,17 +217,20 @@ class PlanShapeSpec extends AnyFunSuite {
       s"exact-percentile aggregate over an unbounded domain in: ${offenders.mkString(", ")}")
   }
 
-  test("sim_kmeans_train: build + noop write runs in at most 10 jobs and leaves nothing cached") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** Builds a query from a clean cache, forces it with a `noop` write and
+    * asserts it ran in at most `maxJobs` Spark jobs (build-time actions
+    * included) and left no persisted RDD behind.
+    */
+  private def assertJobsAndNoCache(maxJobs: Int)(build: => DataFrame): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new AtomicInteger
     val counter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(counter)
     try {
-      graft.ops.Similarity.kmeansTrain(spark, dir).write.format("noop").mode("overwrite").save()
+      build.write.format("noop").mode("overwrite").save()
       // job-start events ride the async listener bus: drain it before
       // reading (waitUntilEmpty is private[spark] in source, public in
       // bytecode)
@@ -226,10 +238,27 @@ class PlanShapeSpec extends AnyFunSuite {
       bus.getClass.getMethods
         .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0).get.invoke(bus)
     } finally spark.sparkContext.removeSparkListener(counter)
-    // two refit aggregates collected to the driver plus the sorted write
-    assert(jobs.get <= 10, s"${jobs.get} jobs")
+    assert(jobs.get <= maxJobs, s"${jobs.get} jobs")
     val cached = spark.sparkContext.getPersistentRDDs
     assert(cached.isEmpty, cached.values.map(_.name).mkString("; "))
+  }
+
+  test("sim_kmeans_train: build + noop write runs in at most 10 jobs and leaves nothing cached") {
+    // two refit aggregates collected to the driver plus the sorted write
+    assertJobsAndNoCache(10)(graft.ops.Similarity.kmeansTrain(spark, dir))
+  }
+
+  test("txt_winnowing: map-only up to its final sort, at most 4 jobs, nothing cached") {
+    val plan = graft.ops.TextOps.winnowing(spark, dir).queryExecution.executedPlan
+    def count(f: PartialFunction[SparkPlan, SparkPlan]) = collect(plan)(f).size
+    // the presentation orderBy's range partitioning is the only exchange
+    assert(count { case e: ShuffleExchangeLike => e } === 1, plan)
+    assert(count { case w: WindowExec => w } === 0, plan)
+    assert(count { case j: BaseJoinExec => j } === 0, plan)
+    assert(count { case b: BroadcastExchangeLike => b } === 0, plan)
+    // the parquet footer read, the range-bounds sample, the map stage and
+    // the sorted write
+    assertJobsAndNoCache(4)(graft.ops.TextOps.winnowing(spark, dir))
   }
 
   test("no cartesian products anywhere; nested-loop joins only where bounded by design") {

@@ -1,8 +1,66 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import graft.functions.Winnow
 import graft.ops.{Dedup, TextOps}
+
+/** The relational winnowing plan that [[graft.functions.Winnow]] replaced,
+  * kept as the bit-identity reference: posexplode the tokens, lead() the
+  * next K−1 over a per-doc position window, one md5 per shingle, a W-row
+  * min() window over the packed (hash, reversed pos) keys, distinct, then
+  * aggregate and join back to every document.
+  */
+object WinnowReference {
+  import Winnow.{K, PosBits, W}
+
+  /** Distinct selections: (doc_id, n_sh, sel), sel packing
+    * (hash << PosBits) | reversed-pos.
+    */
+  def selections(docs: DataFrame): DataFrame = {
+    val w = Window.partitionBy("doc_id").orderBy("pos")
+    val leads = (2 to K).map(i => lead("t", i - 1).over(w).as(s"t$i"))
+    val sh = docs
+      .select(col("doc_id"), posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "t")))
+      .select(col("doc_id") +: col("pos") +: col("t") +: leads: _*)
+      .filter(col(s"t$K").isNotNull) // shingle starts: pos = 0..n_sh-1
+      .select(col("doc_id"), col("pos"),
+        conv(substring(md5(concat_ws(" ",
+          col("t") +: (2 to K).map(i => col(s"t$i")): _*)), 1, 8), 16, 10)
+          .cast("long").as("h"))
+    val win = w.rowsBetween(Window.currentRow, W - 1)
+    sh
+      .withColumn("key",
+        shiftleft(col("h"), PosBits) + (lit((1L << PosBits) - 1) - col("pos")))
+      .withColumn("n_sh", count(lit(1)).over(Window.partitionBy("doc_id")))
+      .withColumn("sel", min(col("key")).over(win))
+      // valid window starts; max(n_sh - W, 0) keeps ONE truncated window
+      // for docs with fewer than W shingles
+      .filter(col("pos") <= greatest(col("n_sh") - W, lit(0L)))
+      .select(col("doc_id"), col("n_sh"), col("sel"))
+      .distinct()
+  }
+
+  def winnowingOf(docs: DataFrame): DataFrame = {
+    val agg = selections(docs).groupBy("doc_id")
+      .agg(max(col("n_sh")).as("n_shingles"),
+        count(lit(1)).as("n_fp"),
+        sum(shiftright(col("sel"), PosBits)).as("fp_checksum"))
+    docs.select("doc_id").join(agg, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
+        coalesce(col("n_fp"), lit(0L)).as("n_fp"),
+        when(coalesce(col("n_shingles"), lit(0L)) === 0, lit(0.0))
+          .otherwise(round(col("n_fp").cast("double") / col("n_shingles"), 4))
+          .as("fp_density"),
+        coalesce(col("fp_checksum"), lit(0L)).as("fp_checksum"))
+      .orderBy("doc_id")
+  }
+}
 
 /** Fixture tests for the two round-9 corpus-maintenance operators:
   * winnowing fingerprint selection (Schleimer/Wilkerson/Aiken SIGMOD'03;
@@ -25,20 +83,129 @@ class WinnowingSpec extends AnyFunSuite {
   }
 
   test("winnowing guarantee: docs sharing a run of >= W+K-1 tokens share a fingerprint hash") {
-    import spark.implicits._
-    // 8 shared tokens (= WinW + WinK - 1) at different offsets and with
+    // 8 shared tokens (= W + K - 1) at different offsets and with
     // different surrounding text — the SIGMOD'03 guarantee says at least one
     // selected fingerprint hash must coincide.
     val shared = "zebra quark lumen forge vex nimbus oryx pylon"
     val a = s"alpha beta $shared gamma delta epsilon"
     val b = s"one two three four $shared five"
-    val sel = TextOps.winnowSelections(docs(1L -> a, 2L -> b))
-      .select(col("doc_id"), shiftright(col("sel"), 21).as("h"))
-      .as[(Long, Long)].collect()
-    val ha = sel.filter(_._1 == 1L).map(_._2).toSet
-    val hb = sel.filter(_._1 == 2L).map(_._2).toSet
+    def hashes(text: String) =
+      Winnow.selections(text.split(" ").toSeq).map(_ >> Winnow.PosBits).toSet
+    val ha = hashes(a)
+    val hb = hashes(b)
     assert((ha intersect hb).nonEmpty,
       "shared 8-token run must yield a common winnowed fingerprint")
+  }
+
+  /** Constructed edge cases for the bit-identity tests; the fixture
+    * corpus covers ordinary documents.
+    */
+  private val edgeDocs: Seq[(Long, Option[String])] = {
+    val periodic = Seq("a b c", "x y z", "p q r", "j k l", "m n o", "d e f")
+      .zipWithIndex.map { case (p, i) => (20L + i) -> Some(Seq.fill(4)(p).mkString(" ")) }
+    Seq(
+      1L -> None, //                                       null text
+      2L -> Some(""),
+      3L -> Some("a b c d"), //                            K - 1 tokens
+      4L -> Some("a b c d e"), //                          exactly K
+      5L -> Some("a b c d e f"), //                        K + 1: fewer than W shingles
+      6L -> Some(Seq.fill(12)("same").mkString(" ")), //  every window ties
+      7L -> Some((1 to 200).map(i => s"tok$i").mkString(" ")),
+      8L -> Some("The QUICK brown Fox JUMPS over The lazy DOG and THE quick BROWN fox"),
+      9L -> Some("café naïve 東京 straße ÿ δοκιμή 日本語 テキスト émigré über café naïve 東京"),
+      // "one two three four five" at positions 0, 7 and 16
+      10L -> Some("one two three four five six seven one two three four five " +
+        "eight nine ten eleven one two three four five twelve"),
+      11L -> Some("  padded\twith \n mixed   whitespace and a few more tokens  ")) ++
+      periodic // a shingle repeating 3 positions apart: rightmost vs leftmost ties differ
+  }
+
+  /** Runs `body` on the fixture's documents and on the edge cases, both
+    * read from parquet: a local frame would be constant-folded by the
+    * optimizer and never reach the generated code.
+    */
+  private def withCorpora(body: (String, DataFrame) => Unit): Unit = {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-winnow")
+    try {
+      val path = d.resolve("documents.parquet").toString
+      edgeDocs.toDF("doc_id", "text").write.parquet(path)
+      body("fixture", Tables.documents(spark, TestSpark.sfDir))
+      body("edge", spark.read.parquet(path))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
+  }
+
+  private def bitRows(df: DataFrame) = {
+    import spark.implicits._
+    df.select("doc_id", "n_shingles", "n_fp", "fp_density", "fp_checksum")
+      .as[(Long, Long, Long, Double, Long)].collect()
+      .map(r => (r._1, r._2, r._3, java.lang.Double.doubleToRawLongBits(r._4), r._5))
+      .toSeq
+  }
+
+  test("winnowingOf is bit-identical to the relational reference (fixture + edge cases)") {
+    withCorpora { (corpus, d) =>
+      val got = bitRows(TextOps.winnowingOf(d))
+      assert(got.nonEmpty)
+      assert(got === bitRows(WinnowReference.winnowingOf(d)), corpus)
+      // the edge cases exercise what they claim to
+      val byId = got.map(r => r._1 -> r).toMap
+      if (corpus == "edge") {
+        assert(byId(1L)._2 === 0L)
+        assert(byId(2L)._2 === 0L && byId(3L)._2 === 0L)
+        assert(byId(4L)._3 === 1L && byId(5L)._3 === 1L)
+        assert(byId(7L)._2 === 196L)
+      }
+    }
+  }
+
+  test("Winnow.selections equals the relational distinct selections per document") {
+    import spark.implicits._
+    val posMask = (1L << Winnow.PosBits) - 1
+    withCorpora { (corpus, d) =>
+      val ref = WinnowReference.selections(d).select("doc_id", "sel")
+        .as[(Long, Long)].collect().groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+      val toks = d.select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
+        .as[(Long, Option[Seq[String]])].collect()
+      assert(toks.length > 1)
+      toks.foreach { case (id, t) =>
+        val sel = Winnow.selections(t.getOrElse(Nil))
+        assert(sel.toSet === ref.getOrElse(id, Set.empty), s"$corpus doc $id")
+        val pos = sel.map(k => posMask - (k & posMask))
+        assert(pos.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
+          s"$corpus doc $id: selections must be distinct and in position order")
+      }
+    }
+  }
+
+  test("winnow: generated code equals interpreted eval and runs inside WholeStageCodegen") {
+    import spark.implicits._
+    Winnow.register(spark)
+    // a generated class that fails to compile must fail the test, not fall
+    // back to interpreted eval
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try withCorpora { (corpus, d) =>
+      // the tokens are materialized first: the tokenizer's filter lambda is
+      // CodegenFallback, which keeps its own projection out of a codegen stage
+      val dir = java.nio.file.Files.createTempDirectory("graft-winnow-toks")
+      try {
+        val path = dir.resolve("toks.parquet").toString
+        d.select(col("doc_id"), TextOps.tokens(col("text")).as("t")).write.parquet(path)
+        val coded = spark.read.parquet(path)
+          .select(col("doc_id"), call_function("winnow", col("t")).as("w"), col("t"))
+        val plan = coded.queryExecution.executedPlan.toString
+        assert(plan.linesIterator.exists(l =>
+          l.contains("winnow") && l.trim.startsWith("*(")), plan)
+        coded.select("doc_id", "w.n_shingles", "w.n_fp", "w.fp_checksum", "t")
+          .as[(Long, Long, Long, Long, Option[Seq[String]])].collect().foreach {
+            case (id, nSh, nFp, ck, t) =>
+              val row = Winnow(Literal.create(t.orNull, ArrayType(StringType))).eval()
+                .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+              assert((row.getLong(0), row.getLong(1), row.getLong(2)) === ((nSh, nFp, ck)),
+                s"$corpus doc $id")
+          }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
   test("winnowing counts: all-identical tokens select one fingerprint per window (rightmost min)") {

@@ -8,7 +8,7 @@ sorted), row count, and value-hash over rows sorted by all columns.
 
 Usage: python3 tools/check.py [sfdir] [outdir] [--skip-verify] [query ...]
 """
-import json, subprocess, sys, hashlib, math
+import json, os, subprocess, sys, hashlib, math
 from pathlib import Path
 
 import duckdb
@@ -34,6 +34,8 @@ def run_verify(sfdir, outdir):
             "-Dspark.sql.session.timeZone=UTC",
             "-cp", cp, "graft.Verify", sfdir, outdir])
     env = {"PATH": "/usr/bin:/bin", "SPARK_GRAFT_CPUS": "8"}
+    if "SPARK_GRAFT_VERIFY_ONLY" in os.environ:
+        env["SPARK_GRAFT_VERIFY_ONLY"] = os.environ["SPARK_GRAFT_VERIFY_ONLY"]
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line:

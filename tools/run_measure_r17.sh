@@ -8,7 +8,7 @@
 #   2. factor-100 replica rebuild (target/sf10 was reclaimed after the
 #      ngram probe)
 #   3. full-suite sweep at sf0.1 + sf10 -> /tmp/bench_{base,100x}_r17.json
-#      (assembled into bench_scaling_r17.json by tools/assemble_scaling_r17.py)
+#      (assembled into bench_scaling_r17.json by tools/assemble_scaling.py --round 17)
 cd /root/repo || exit 1
 : > /tmp/measure_r17.status
 

@@ -10,7 +10,7 @@
 #   3. round-final full bench at sf0.1, reps=3     -> bench_full_r18.json
 #   4. factor-100 full-suite sweep, reps=2         -> /tmp/bench_100x_r18.json
 #      (assembled with the base leg into bench_scaling_r18.json by
-#       tools/assemble_scaling_r18.py)
+#       tools/assemble_scaling.py --round 18)
 #
 # target/sf10 is the r17 ScaleUp replica of /root/testdata/sf0.1 — the
 # testdata is unchanged this round, so it is reused as-is.
@@ -49,6 +49,6 @@ SPARK_GRAFT_BENCH_REPS=2 SPARK_GRAFT_BENCH_OUT=/tmp/bench_100x_r18.json \
   > /tmp/bench_100x_r18.stdout 2> /tmp/bench_100x_r18.stderr
 echo "SF10 EXIT $?" >> /tmp/measure_r18.status
 
-python3 tools/assemble_scaling_r18.py > /tmp/assemble_r18.stdout 2>&1
+python3 tools/assemble_scaling.py --round 18 > /tmp/assemble_r18.stdout 2>&1
 echo "ASSEMBLE EXIT $?" >> /tmp/measure_r18.status
 echo "ALLDONE" >> /tmp/measure_r18.status
