@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Local.jstr
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: runs every declared query at the given scale factor and
@@ -17,14 +17,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Local.cpus
+    val spark = Local.session()
     // Untimed warmup: exercise scan/shuffle/window/codegen machinery once so
     // session JIT doesn't land on whichever query sorts first — per-query
     // numbers then measure the queries. (Measured: the first two queries
@@ -91,19 +85,6 @@ object Bench {
         }
       }
     })
-    // stage-completed events arrive on the async listener bus; drain it
-    // before reading the counters (reflection: waitUntilEmpty is
-    // private[spark] — bytecode-public — and the fallback sleep only fires
-    // if the API moves)
-    def drainBus(): Unit =
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .map(_.invoke(bus))
-          .getOrElse(Thread.sleep(200))
-      } catch { case _: Exception => Thread.sleep(200) }
     val shuffleMb = scala.collection.mutable.Map.empty[String, Double]
       .withDefaultValue(0.0)
     val spillMb = scala.collection.mutable.Map.empty[String, Double]
@@ -128,22 +109,6 @@ object Bench {
     val winIdx = scala.collection.mutable.Map.empty[String, Vector[Int]]
       .withDefaultValue(Vector.empty)
     val errors = scala.collection.mutable.Map.empty[String, String]
-    // Queries that persist() intermediates leave entries registered in the
-    // CacheManager after the write completes; across 130+ queries the
-    // leaked entries build memory pressure that inflates whichever queries
-    // run last (measured: txt_term_freq 3.3 s polluted vs 0.50 s clean).
-    // clearCache alone is NOT enough: localCheckpoint blocks (the
-    // labelPropagate rounds) are RDD-level caches the catalog never sees.
-    // Sweeping the persistent-RDD registry too makes every sample a
-    // cold-cache run of the query's own persists, nothing shared — and a
-    // query that leaks anyway cannot tax its successors.
-    // blocking=true: block removal must COMPLETE before the next t0 is
-    // taken — async teardown overlapping the timed region is measurement
-    // noise on exactly the numbers this file exists to stabilize.
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
     // SENTINEL: a fixed window+two-shuffle aggregate over GENERATED rows,
     // timed at the start / middle / end of every pass. Its workload never
     // changes — and since r15 it reads no table at all (spark.range), so
@@ -161,9 +126,9 @@ object Bench {
     def sentinelOnce(): Double = {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      sweep()
+      Local.sweep(spark)
       val t0 = System.nanoTime()
-      spark.range(0, 10L << 20, 1, cpus.toInt)
+      spark.range(0, 10L << 20, 1, cpus)
         .select((col("id") % 100000).as("k"),
           pmod(xxhash64(col("id")), lit(1L << 32)).as("h")) // ANSI-safe sums
         .withColumn("rk", row_number().over(
@@ -180,15 +145,22 @@ object Bench {
     for (pass <- 1 to reps) {
       // Between passes: drop every cached frame and let a full GC settle,
       // so pass p's early queries don't pay pass p−1's tail garbage.
-      sweep()
+      Local.sweep(spark)
       System.gc()
       Thread.sleep(2000)
       val order = if (pass % 2 == 1) names else names.reverse
       val sent = scala.collection.mutable.ArrayBuffer(sentinelOnce())
       for ((name, i) <- order.zipWithIndex) {
         if (order.size >= 2 && i == order.size / 2) sent += sentinelOnce()
-        sweep()
-        drainBus()
+        // Queries that persist() intermediates leave entries registered in
+        // the CacheManager after the write completes; across 130+ queries
+        // the leaked entries build memory pressure that inflates whichever
+        // queries run last (measured: txt_term_freq 3.3 s polluted vs
+        // 0.50 s clean). The sweep makes every sample a cold-cache run.
+        Local.sweep(spark)
+        // stage-completed events ride the async listener bus: drain it
+        // before reading the counters
+        Local.drainBus(spark.sparkContext)
         val (sh0, sp0, cg0) = (shuffleAcc.get(), spillAcc.get(), compiles.getCount)
         val t0 = System.nanoTime()
         try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -198,7 +170,7 @@ object Bench {
         }
         samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
         codegenCompiles(name) = codegenCompiles(name) :+ (compiles.getCount - cg0)
-        drainBus()
+        Local.drainBus(spark.sparkContext)
         shuffleMb(name) = math.max(shuffleMb(name),
           (shuffleAcc.get() - sh0) / 1048576.0)
         spillMb(name) = math.max(spillMb(name),
@@ -211,12 +183,6 @@ object Bench {
     }
     // a query that failed ANY pass is reported as an error, not a timing
     val results = names.map(n => (n, samples(n), errors.get(n)))
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val ok = results.filter(_._3.isEmpty)
     // 0.1 ms precision: full-precision doubles ×63 queries ×N samples made the
     // round-4 stdout line 5.2 KB — past the driver's tail-capture window, so

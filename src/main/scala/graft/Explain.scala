@@ -1,22 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: print the formatted physical plan of the named queries
   * (all of them if no args) at the given SF dir — the .explain feedback loop
   * the build brief mandates (pushdown reaching the scan, broadcast vs
   * shuffle joins, WholeStageCodegen spans, partial aggregation).
   *
-  * Usage: graft.Explain [queryName ...]   (env SPARK_GRAFT_SF_DIR)
+  * Usage: graft.Explain [queryName ...]   (env SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Local.session()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -388,22 +388,37 @@ object Dedup extends QueryModule {
     fin
   }
 
-  /** Scale-ADAPTIVE partition count for an iterative frame of `rows` known
-    * rows (guide §2): ~`spark.graft.rowsPerPartition` rows per partition
-    * (default 4 M ≈ 128 MB of narrow two-long rows — the guide's
-    * 100 MB–1 GB sizing), floor 1, no upper cap. Derived from a MEASURED
-    * count instead of a constant tuned for either local mode or a cluster:
-    * a 50-pair dedup graph at sf0.1 collapses to single-task loop stages
-    * (the fixed 32-way shuffle of it was pure scheduling overhead — AQE
-    * cannot help because `parallelismFirst` keeps post-shuffle partitions
-    * at core count, and cached-plan partitioning is pinned anyway), while a
-    * 10¹²-edge graph at 100 TB gets ~250 k partitions of ~128 MB.
+  /** Releases the checkpoint blocks `df` reads — a localCheckpoint or
+    * checkpoint is an RDD-level cache that `unpersist` on the frame and
+    * `catalog.clearCache` never see — and returns those RDDs, whose
+    * reliable-checkpoint files (if any) outlive the blocks.
     */
-  private[graft] def adaptiveParts(df: DataFrame, rows: Long): Int = {
-    val per = df.sparkSession.conf.getOption("spark.graft.rowsPerPartition")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(1L << 22)
-    math.max(1L, (rows + per - 1) / per).min(Int.MaxValue.toLong).toInt
+  private[graft] def releaseCheckpoint(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] = {
+    val rdds = df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+    rdds.foreach(_.unpersist(false))
+    rdds
   }
+
+  /** Rows per partition of an iterative frame: 4 M narrow two-long rows
+    * ≈ 128 MB, inside the guide's 100 MB–1 GB sizing.
+    */
+  private val RowsPerPartition = 1L << 22
+
+  /** Scale-ADAPTIVE partition count for an iterative frame of `rows` known
+    * rows (guide §2): one partition per [[RowsPerPartition]] rows, floor 1,
+    * no upper cap. Derived from a MEASURED count instead of a core count
+    * tuned for either local mode or a cluster: a 50-pair dedup graph at
+    * sf0.1 collapses to single-task loop stages (the fixed 32-way shuffle
+    * of it was pure scheduling overhead — AQE cannot help because
+    * `parallelismFirst` keeps post-shuffle partitions at core count, and
+    * cached-plan partitioning is pinned anyway), while a 10¹²-edge graph
+    * at 100 TB gets ~250 k partitions of ~128 MB.
+    */
+  private[graft] def adaptiveParts(rows: Long): Int =
+    math.max(1L, (rows + RowsPerPartition - 1) / RowsPerPartition)
+      .min(Int.MaxValue.toLong).toInt
 
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
     minhashPairsAbove(s, dir, JaccardT)
@@ -737,7 +752,7 @@ object Dedup extends QueryModule {
     // stages on a 50-pair sf0.1 graph, ~250 k partitions at a 10¹²-edge
     // 100 TB graph. The old fixed spark.sql.shuffle.partitions layout made
     // every per-round stage a core-count-wide fan of near-empty tasks.
-    val edgeParts = adaptiveParts(pairs, 2L * pairs.count())
+    val edgeParts = adaptiveParts(2L * pairs.count())
     val edges = pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
@@ -772,19 +787,13 @@ object Dedup extends QueryModule {
     reliableDir.foreach(d => spark.sparkContext.setCheckpointDir(d))
     def materialize(df: DataFrame): DataFrame =
       if (reliableDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    def chkRdds(df: DataFrame) =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
-    def releaseBlocks(df: DataFrame): Unit =
-      chkRdds(df).foreach(_.unpersist(false))
-    def deleteFiles(df: DataFrame): Unit =
-      chkRdds(df).foreach(_.getCheckpointFile.foreach { f =>
+    def deleteFiles(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
+      rdds.foreach(_.getCheckpointFile.foreach { f =>
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       })
     // superseded rounds: blocks AND files go eagerly (O(1 round) store)
-    def release(df: DataFrame): Unit = { releaseBlocks(df); deleteFiles(df) }
+    def release(df: DataFrame): Unit = deleteFiles(releaseCheckpoint(df))
     // One monotone round (neighbor-min + pointer jump); `old_label` rides
     // through untouched so the caller can fuse several rounds into one
     // lineage and still test convergence against the iteration's START.
@@ -862,10 +871,9 @@ object Dedup extends QueryModule {
     // store owner / session teardown — durability, not a leak.
     val fin = labels.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     fin.count()
-    val finalChk = chk
-    releaseBlocks(finalChk)
+    val finalRdds = releaseCheckpoint(chk)
     edges.unpersist(false)
-    val cleanup = () => { fin.unpersist(false); deleteFiles(finalChk); () }
+    val cleanup = () => { fin.unpersist(false); deleteFiles(finalRdds); () }
     (fin, rounds, cleanup)
   }
 

@@ -574,7 +574,7 @@ object Similarity extends QueryModule {
     // shuffles once for all [[RankIters]] rounds, and the degree aggregate
     // needs no exchange at all; only the n-row rank vector moves per round.
     val edges = edgeList
-      .repartition(graft.ops.Dedup.adaptiveParts(edgeList, 4L * n), col("src"))
+      .repartition(graft.ops.Dedup.adaptiveParts(4L * n), col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     var r = nodeList.select(col("vec_id"), lit(1000000000000L / n).as("r12"))
@@ -642,7 +642,7 @@ object Similarity extends QueryModule {
     if (n == 0) return emptyRanks(nodeList)
     // src-partitioned before the persist — see [[graphRankOf]] (r18)
     val edges = edgeList
-      .repartition(graft.ops.Dedup.adaptiveParts(edgeList, 4L * n), col("src"))
+      .repartition(graft.ops.Dedup.adaptiveParts(4L * n), col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // deg feeds the per-round inflow join AND the dangling anti join;
     // it inherits the src partitioning (no exchange to build or join it)
@@ -788,7 +788,7 @@ object Similarity extends QueryModule {
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       // every hop joins on src — shuffle once (r18)
-      .repartition(Dedup.adaptiveParts(g, 8L * nNodes), col("src"))
+      .repartition(Dedup.adaptiveParts(8L * nNodes), col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seeds = corpus(s, dir).select(col("vec_id"))
       .filter(col("vec_id") < NumQueries)
@@ -864,7 +864,7 @@ object Similarity extends QueryModule {
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       // every beam hop joins on src — shuffle once (r18)
-      .repartition(Dedup.adaptiveParts(edges, 8L * nNodes), col("src"))
+      .repartition(Dedup.adaptiveParts(8L * nNodes), col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val q = vecs.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("vq").as("qv"), col("n2").as("qn2"))

@@ -1450,29 +1450,23 @@ object TextOps extends QueryModule {
 
   /** The shared training loop: returns the K one-row merge frames, the
     * FINAL vocabulary `(w, ws, f)` — original word, fully-merged framed
-    * symbol string, corpus frequency — and the checkpoint-release hook.
-    * [[bpeTrainOf]] ships the merge list; [[bpeTokenizeOf]] ships the
-    * final vocab applied back to the corpus. Both release everything they
-    * don't return.
+    * symbol string, corpus frequency — all checkpoint frames the caller
+    * releases with [[Dedup.releaseCheckpoint]]. [[bpeTrainOf]] ships the
+    * merge list; [[bpeTokenizeOf]] ships the final vocab applied back to
+    * the corpus. Both release everything they don't return.
     */
-  private def bpeLoop(docs: DataFrame)
-      : (Seq[DataFrame], DataFrame, DataFrame => Unit) = {
-    def chk(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(false))
-    var vocab = chk(docs
+  private def bpeLoop(docs: DataFrame): (Seq[DataFrame], DataFrame) = {
+    var vocab = docs
       .select(explode(tokens(col("text"))).as("w"))
       .filter(!col("w").contains("{") && !col("w").contains("}"))
       .groupBy("w").agg(count(lit(1)).as("f"))
       .select(col("w"), regexp_replace(col("w"), "(.)", "{$1}").as("ws"),
-        col("f")))
+        col("f")).localCheckpoint(true)
     val tops = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var step = 1
     var exhausted = false
     while (step <= BpeMerges && !exhausted) {
-      val top = chk(vocab
+      val top = vocab
         .select(col("f"),
           split(expr("substring(ws, 2, length(ws) - 2)"), "\\}\\{").as("s"))
         .filter(size(col("s")) >= 2)
@@ -1484,25 +1478,25 @@ object TextOps extends QueryModule {
         .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
         .limit(1)
         .select(lit(step.toLong).as("step"), col("lhs"), col("rhs"),
-          col("pair_count")))
-      if (top.isEmpty) { release(top); exhausted = true }
+          col("pair_count")).localCheckpoint(true)
+      if (top.isEmpty) { Dedup.releaseCheckpoint(top); exhausted = true }
       else {
         tops += top
-        val next = chk(vocab
+        val next = vocab
           .crossJoin(broadcast(top.select(col("lhs").as("ml"), col("rhs").as("mr"))))
           .select(col("w"), expr("replace(ws, '{' || ml || '}{' || mr || '}'," +
-            " '{' || ml || mr || '}')").as("ws"), col("f")))
-        release(vocab)
+            " '{' || ml || mr || '}')").as("ws"), col("f")).localCheckpoint(true)
+        Dedup.releaseCheckpoint(vocab)
         vocab = next
         step += 1
       }
     }
-    (tops.toSeq, vocab, release)
+    (tops.toSeq, vocab)
   }
 
   private[graft] def bpeTrainOf(docs: DataFrame): DataFrame = {
-    val (tops, vocab, release) = bpeLoop(docs)
-    release(vocab)
+    val (tops, vocab) = bpeLoop(docs)
+    Dedup.releaseCheckpoint(vocab)
     if (tops.isEmpty) {
       import docs.sparkSession.implicits._
       return Seq.empty[(Long, String, String, Long)]
@@ -1513,7 +1507,7 @@ object TextOps extends QueryModule {
     val out = tops.reduce(_ union _).orderBy("step")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    tops.foreach(release)
+    tops.foreach(Dedup.releaseCheckpoint)
     out
   }
 
@@ -1542,8 +1536,8 @@ object TextOps extends QueryModule {
     bpeTokenizeOf(Tables.documents(s, dir))
 
   private[graft] def bpeTokenizeOf(docs: DataFrame): DataFrame = {
-    val (tops, vocab, release) = bpeLoop(docs)
-    tops.foreach(release)
+    val (tops, vocab) = bpeLoop(docs)
+    tops.foreach(Dedup.releaseCheckpoint)
     val nsyms = vocab.select(col("w"),
       size(split(expr("substring(ws, 2, length(ws) - 2)"), "\\}\\{"))
         .cast("long").as("n_syms"))
@@ -1565,7 +1559,7 @@ object TextOps extends QueryModule {
       .orderBy("lang")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    release(vocab)
+    Dedup.releaseCheckpoint(vocab)
     out
   }
 
@@ -1716,15 +1710,10 @@ object TextOps extends QueryModule {
     * the oracle).
     */
   private def uniLoop(docs: DataFrame): (DataFrame, () => Unit) = {
-    def chk(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(false))
-    val vocab = chk(docs
+    val vocab = docs
       .select(explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")).between(1, UniWordMax))
-      .groupBy("w").agg(count(lit(1)).as("f")))
+      .groupBy("w").agg(count(lit(1)).as("f")).localCheckpoint(true)
     val subs = vocab
       .select(col("w"), col("f"),
         explode(sequence(lit(1), length(col("w")))).as("s"))
@@ -1736,7 +1725,7 @@ object TextOps extends QueryModule {
     val chars0 = subs.filter(length(col("piece")) === 1)
     val multi0 = subs.filter(length(col("piece")) >= 2)
       .orderBy(col("cnt").desc, col("piece").asc).limit(UniSeedKeep)
-    val pieces0 = chk(chars0.unionAll(multi0))
+    val pieces0 = chars0.unionAll(multi0).localCheckpoint(true)
     // Each segmentation is checkpointed BEFORE anything explodes it:
     // InferFiltersFromGenerate plants a size(pieces) > 0 predicate under
     // the explode, and predicate pushdown would then substitute it down
@@ -1744,7 +1733,7 @@ object TextOps extends QueryModule {
     // (the exact blowup the layering exists to prevent). The checkpoint
     // makes the chain a leaf, so the inferred filter stops there; it also
     // guarantees the segmentation pass executes exactly once per round.
-    val seg1 = chk(segmentWords(vocab, pieceMap(pieces0)))
+    val seg1 = segmentWords(vocab, pieceMap(pieces0)).localCheckpoint(true)
     val counts1 = seg1
       .select(col("f"), explode(col("pieces")).as("piece"))
       .groupBy("piece").agg(sum("f").as("cnt"))
@@ -1753,12 +1742,12 @@ object TextOps extends QueryModule {
       .select(col("piece"), (coalesce(col("cnt"), lit(0L)) + 1L).as("cnt"))
     val multi1 = counts1.filter(length(col("piece")) >= 2)
       .orderBy(col("cnt").desc, col("piece").asc).limit(UniPruneKeep)
-    val pieces1 = chk(chars1.unionAll(multi1))
-    release(pieces0)
-    release(seg1)
-    val seg2 = chk(segmentWords(vocab, pieceMap(pieces1)))
-    release(pieces1)
-    (seg2, () => { release(seg2); release(vocab) })
+    val pieces1 = chars1.unionAll(multi1).localCheckpoint(true)
+    Dedup.releaseCheckpoint(pieces0)
+    Dedup.releaseCheckpoint(seg1)
+    val seg2 = segmentWords(vocab, pieceMap(pieces1)).localCheckpoint(true)
+    Dedup.releaseCheckpoint(pieces1)
+    (seg2, () => { Dedup.releaseCheckpoint(seg2); Dedup.releaseCheckpoint(vocab) })
   }
 
   /** Unigram-LM tokenizer training — emits the learned piece inventory
@@ -1930,11 +1919,6 @@ object TextOps extends QueryModule {
       trace: Seq[DataFrame], release: () => Unit)
 
   private def perceptronLoop(docs: DataFrame): PerceptronState = {
-    def chk(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(false))
     val spark = docs.sparkSession
     // comps cached PRE-PARTITIONED on doc_id (r19, guide §2.4): every
     // round's scoring aggregate (groupBy doc_id) and the misclassified-set
@@ -1950,7 +1934,7 @@ object TextOps extends QueryModule {
         featSign(col("t")).as("s"))
       .groupBy("doc_id", "dim").agg(sum("s").as("x"))
       .filter(col("x") =!= 0)
-      .repartition(graft.ops.Dedup.adaptiveParts(docs, nDocs * EmbedDim),
+      .repartition(graft.ops.Dedup.adaptiveParts(nDocs * EmbedDim),
         col("doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     comps.count()
@@ -1958,9 +1942,10 @@ object TextOps extends QueryModule {
         when(pmod(substring(col("source"), 4, 10).cast("int"), lit(4)) === 0,
           lit(1L)).otherwise(lit(-1L)).as("y"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var w = chk(spark.range(EmbedDim.toLong)
-      .select(col("id").as("dim"), lit(0L).as("wv")))
-    var st = chk(spark.range(1).select(lit(0L).as("bias"), lit(0L).as("nm")))
+    var w = spark.range(EmbedDim.toLong)
+      .select(col("id").as("dim"), lit(0L).as("wv")).localCheckpoint(true)
+    var st = spark.range(1).select(lit(0L).as("bias"), lit(0L).as("nm"))
+      .localCheckpoint(true)
     // trace rows stay LAZY over the checkpointed state frames; everything
     // they reference is released only after the final union materializes
     val trace = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -1968,19 +1953,20 @@ object TextOps extends QueryModule {
     for (round <- 1 to PerceptronRounds) {
       val dots = comps.join(broadcast(w), "dim")
         .groupBy("doc_id").agg(sum(col("wv") * col("x")).as("dot"))
-      val mis = chk(lbl.join(dots, Seq("doc_id"), "left")
+      val mis = lbl.join(dots, Seq("doc_id"), "left")
         .crossJoin(broadcast(st.select("bias")))
         .filter(col("y") * (coalesce(col("dot"), lit(0L)) + col("bias")) <= 0)
-        .select("doc_id", "y"))
-      val stNext = chk(st.select("bias").crossJoin(
+        .select("doc_id", "y").localCheckpoint(true)
+      val stNext = st.select("bias").crossJoin(
           broadcast(mis.agg(coalesce(sum("y"), lit(0L)).as("dy"),
             count(lit(1)).as("nm"))))
-        .select((col("bias") + col("dy")).as("bias"), col("nm")))
+        .select((col("bias") + col("dy")).as("bias"), col("nm")).localCheckpoint(true)
       val dw = mis.join(comps, "doc_id")
         .groupBy("dim").agg(sum(col("y") * col("x")).as("dw"))
-      val wNext = chk(w.join(dw, Seq("dim"), "left")
-        .select(col("dim"), (col("wv") + coalesce(col("dw"), lit(0L))).as("wv")))
-      release(mis)
+      val wNext = w.join(dw, Seq("dim"), "left")
+        .select(col("dim"), (col("wv") + coalesce(col("dw"), lit(0L))).as("wv"))
+        .localCheckpoint(true)
+      Dedup.releaseCheckpoint(mis)
       w = wNext; st = stNext
       state += w; state += st
       val key = abs(col("wv")) * lit(EmbedDim.toLong) +
@@ -1994,7 +1980,7 @@ object TextOps extends QueryModule {
     }
     PerceptronState(comps, lbl, w, st, trace.toSeq, () => {
       comps.unpersist(false); lbl.unpersist(false)
-      state.foreach(release)
+      state.foreach(Dedup.releaseCheckpoint)
     })
   }
 

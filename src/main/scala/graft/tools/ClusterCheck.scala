@@ -6,6 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
+import graft.Local.jstr
 
 /** Multi-executor execution evidence — the Spark-native analogue of the
   * reference's distributed mode (`master_distributed.go:13-30`, worker
@@ -42,12 +43,9 @@ object ClusterCheck {
       extra: Map[String, String] = Map.empty): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-check")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    graft.Local.session(master, Map(
+      "spark.app.name" -> "graft-cluster-check",
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
       // executors are separate JVMs: they need this build's classes (the
       // spark.testing classpath propagation covers sbt runs too, but an
       // explicit entry keeps plain `java -cp` invocations working).
@@ -57,15 +55,11 @@ object ClusterCheck {
       // ClassCastExceptions (SerializedLambda / DefaultSerializationProxy
       // left unresolved) on exactly the tasks that ship graft lambdas or
       // custom expressions, while pure-builtin plans sail through.
-      .config("spark.executor.extraClassPath",
+      "spark.executor.extraClassPath" ->
         sys.props("java.class.path").split(java.io.File.pathSeparator)
           .filter(_.nonEmpty)
           .map(e => new java.io.File(e).getAbsolutePath)
-          .mkString(java.io.File.pathSeparator))
-    extra.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+          .mkString(java.io.File.pathSeparator)) ++ extra)
   }
 
   /** Order-independent digest of a query result (the check.py idiom:
@@ -77,13 +71,6 @@ object ClusterCheck {
     rows.foreach(r => md.update((r + "").getBytes("UTF-8")))
     (rows.length.toLong, md.digest().map("%02x".format(_)).mkString)
   }
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** Kill one executor JVM of this app, forcibly. Executor backends carry
     * `--app-id <appId>` on their command line, so only OUR executors match
@@ -213,17 +200,13 @@ object ClusterCheck {
         "q_tpch_q18", "q_tpch_q9", "ev_session", "txt_tfidf", "mm_phash_neardup")
     }
     def timeAll(spark: SparkSession): (Map[String, Double], Map[String, String]) = {
-      def sweep(): Unit = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      }
       // untimed warmup (session JIT / codegen)
       spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name")
         .count().write.format("noop").mode("overwrite").save()
       val acc = scala.collection.mutable.Map.empty[String, Double]
       val errs = scala.collection.mutable.Map.empty[String, String]
       for (pass <- 1 to reps; name <- if (pass % 2 == 1) names else names.reverse) {
-        sweep()
+        graft.Local.sweep(spark)
         val t0 = System.nanoTime()
         try {
           graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-probe dataset generator: writes a `factor`× replica of a testdata
@@ -60,14 +60,8 @@ object ScaleUp {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Local.cpus
+    val spark = graft.Local.session()
 
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
     // stride leaves the base id space intact and keeps ids dense-ish —
@@ -100,7 +94,7 @@ object ScaleUp {
           col("lang"), col("source"), col("n_chars"))
       }
     (0 until factor).map(docCopy).reduce(_ unionAll _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
 
     val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
@@ -119,7 +113,7 @@ object ScaleUp {
           rotated.as("embedding"), col("label"))
       }
     (0 until factor).map(embCopy).reduce(_ unionAll _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
 
     // TPC-H fact/dim tables: key-SHIFTED copies, exactly how dbgen scales
@@ -143,7 +137,7 @@ object ScaleUp {
       val base = spark.read.parquet(s"$srcDir/$t.parquet")
       (0 until factor).map(c => if (c == 0) base else shifted(base, c))
         .reduce(_ unionAll _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
     copies("customer", (df, c) => df.withColumn("c_custkey",

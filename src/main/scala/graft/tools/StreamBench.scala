@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -41,15 +41,8 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val outFile = args.headOption.getOrElse("bench_streaming_r17.json")
     val nChunks = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Local.session(conf =
+      Map("spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s"))
 
     val legs = Seq(
       ("1x", sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")),

@@ -48,16 +48,14 @@ class CacheCleanupSpec extends AnyFunSuite {
     // query needed. Global sweep: no query, present or future, may leak.
     val dir = TestSpark.sfDir
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Local.sweep(spark)
       q(spark, dir).write.format("noop").mode("overwrite").save()
       val persisted = spark.sparkContext.getPersistentRDDs
       if (persisted.size <= 1) None
       else Some(s"$name leaked ${persisted.size}: " +
         persisted.values.map(r => s"${r.id}:${r.name}").mkString("; "))
     }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    Local.sweep(spark)
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

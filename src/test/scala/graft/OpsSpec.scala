@@ -873,8 +873,7 @@ class OpsSpec extends AnyFunSuite {
         s"expected exactly the final round's checkpoint dir: ${rddDirs()}")
       // simulate executor loss: EVERY cached block in the session dies —
       // the label table's InMemoryRelation and the checkpoint RDD's blocks
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Local.sweep(spark)
       // the reliable path recomputes the labels from the retained files —
       // this is the durability the mode was added to provide
       assert(relLabels.as[(Long, Long)].collect().toMap === localMap,
@@ -894,8 +893,7 @@ class OpsSpec extends AnyFunSuite {
     val (labels, _, cleanup) = Dedup.labelPropagate(pairs)
     assert(labels.count() === 33L)
     // same simulated executor loss as the reliable-mode test above
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    Local.sweep(spark)
     // lineage bottoms out in the dropped localCheckpoint blocks: the
     // recompute MUST fail — if this ever starts passing, the failure mode
     // the reliable path exists for has silently changed shape. The failure

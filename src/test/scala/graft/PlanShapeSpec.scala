@@ -222,8 +222,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     * included) and left no persisted RDD behind.
     */
   private def assertJobsAndNoCache(maxJobs: Int)(build: => DataFrame): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    Local.sweep(spark)
     val jobs = new AtomicInteger
     val counter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -231,12 +230,8 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.sparkContext.addSparkListener(counter)
     try {
       build.write.format("noop").mode("overwrite").save()
-      // job-start events ride the async listener bus: drain it before
-      // reading (waitUntilEmpty is private[spark] in source, public in
-      // bytecode)
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0).get.invoke(bus)
+      // job-start events ride the async listener bus
+      Local.drainBus(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(counter)
     assert(jobs.get <= maxJobs, s"${jobs.get} jobs")
     val cached = spark.sparkContext.getPersistentRDDs

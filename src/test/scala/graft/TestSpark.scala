@@ -6,25 +6,17 @@ import org.apache.spark.sql.SparkSession
   * start; specs must not each pay that).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      // State-store background maintenance (snapshot compaction) can race a
-      // foreground commit when a seconds-long streaming test query stops at
-      // the wrong moment ("Cannot perform commit during state checkpoint"
-      // task aborts — the task retries and the test passes, but the log
-      // noise is indistinguishable from a real failure). Test queries live
-      // for seconds, so compaction buys nothing: push it past the suite.
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Local.session("local[4]", Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse",
+    // State-store background maintenance (snapshot compaction) can race a
+    // foreground commit when a seconds-long streaming test query stops at
+    // the wrong moment ("Cannot perform commit during state checkpoint"
+    // task aborts — the task retries and the test passes, but the log
+    // noise is indistinguishable from a real failure). Test queries live
+    // for seconds, so compaction buys nothing: push it past the suite.
+    "spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s"))
 
   val sfDir = "/root/testdata/sf0.001"
 }

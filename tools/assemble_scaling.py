@@ -26,13 +26,15 @@ def load(p):
         return json.load(f)
 
 
-def expo(b, s):
+def expo(b, s, factor):
     if b <= 0 or s <= 0:
         return None
-    return round(math.log(s / b) / math.log(100), 3)
+    return round(math.log(s / b) / math.log(factor), 3)
 
 
-def assemble(base, big):
+def assemble(base, big, factor=100):
+    """Per-query comparison of a base leg and its ScaleUp replica leg of
+    `factor`; exponents are log-base-`factor` of the time ratio."""
     common = sorted(set(base["queries"]) & set(big["queries"]))
     missing = sorted(set(base["queries"]) ^ set(big["queries"]))
 
@@ -44,8 +46,8 @@ def assemble(base, big):
         queries[n] = {
             "base_sec": qb,
             "sf10_sec": qs,
-            "exponent_raw": expo(qb, qs),
-            "exponent_cal": expo(cb, cs),
+            "exponent_raw": expo(qb, qs, factor),
+            "exponent_cal": expo(cb, cs, factor),
             "sf10_shuffle_mb": round(big["query_shuffle_mb"][n], 1),
             "sf10_spill_mb": round(big["query_spill_mb"][n], 1),
             "base_shuffle_mb": round(base["query_shuffle_mb"][n], 1),
@@ -60,15 +62,16 @@ def assemble(base, big):
     spilled = sorted(queries.items(), key=lambda kv: -kv[1]["sf10_spill_mb"])[:8]
 
     return {
-        "factors": [1, 100],
+        "factors": [1, factor],
         "base_sf": base.get("sf"),
         "scaled_sf": big.get("sf"),
         "full_suite_100x": {
-            "note": ("Full %d-query suite swept at the factor-100 replica, reps=2 "
-                     "min-of-2 per query, per-query peak shuffle-write/spill MB "
+            "note": ("%d-query suite swept at the factor-%d replica, min of %s "
+                     "reps per query, per-query peak shuffle-write/spill MB "
                      "recorded at BOTH legs (the r15 disk-exhaustion lesson made "
-                     "footprint a standing artifact). Base leg = same-day full "
-                     "bench at sf0.1.") % len(common),
+                     "footprint a standing artifact). Base leg = same-window "
+                     "bench at %s.") % (len(common), factor, big.get("reps"),
+                                        base.get("sf")),
             "n_ok": len(common),
             "n_err": len(big.get("errors", {})) if isinstance(big.get("errors"), dict) else 0,
             "reps": big.get("reps"),

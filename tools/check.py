@@ -13,26 +13,14 @@ from pathlib import Path
 
 import duckdb
 
-REPO = Path(__file__).resolve().parent.parent
-ADD_OPENS = []
-for p in ["java.base/java.lang", "java.base/java.lang.invoke",
-          "java.base/java.lang.reflect", "java.base/java.io",
-          "java.base/java.net", "java.base/java.nio",
-          "java.base/java.util", "java.base/java.util.concurrent",
-          "java.base/java.util.concurrent.atomic",
-          "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-          "java.base/sun.security.action", "java.base/sun.util.calendar"]:
-    ADD_OPENS += ["--add-opens", p + "=ALL-UNNAMED"]
-
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def run_verify(sfdir, outdir):
-    cp = f"/opt/spark/jars/*:{REPO}/target/scala-2.13/classes"
-    cmd = (["java"] + ADD_OPENS +
-           ["-Xmx8g", "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC",
-            "-cp", cp, "graft.Verify", sfdir, outdir])
+    # imported here: callers that load this file by path for table_sig do
+    # not have tools/ on sys.path
+    from measure import java_cmd
+    cmd = java_cmd("graft.Verify", sfdir, outdir)
     env = {"PATH": "/usr/bin:/bin", "SPARK_GRAFT_CPUS": "8"}
     if "SPARK_GRAFT_VERIFY_ONLY" in os.environ:
         env["SPARK_GRAFT_VERIFY_ONLY"] = os.environ["SPARK_GRAFT_VERIFY_ONLY"]
