@@ -33,9 +33,10 @@ object Local {
 
   /** Drops every cached frame, so the next query runs on a cold cache and
     * cannot pay for a predecessor's leak. `clearCache` alone is not enough:
-    * localCheckpoint blocks (the iterative loops' rounds) are RDD-level
-    * caches the catalog never sees, so the persistent-RDD registry is swept
-    * too. Blocking: removal completes before the caller's next timed region.
+    * checkpoint blocks (label propagation's per-iteration label tables)
+    * are RDD-level caches the catalog never sees, so the persistent-RDD
+    * registry is swept too. Blocking: removal completes before the
+    * caller's next timed region.
     */
   def sweep(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

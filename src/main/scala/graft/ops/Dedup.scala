@@ -388,19 +388,6 @@ object Dedup extends QueryModule {
     fin
   }
 
-  /** Releases the checkpoint blocks `df` reads — a localCheckpoint or
-    * checkpoint is an RDD-level cache that `unpersist` on the frame and
-    * `catalog.clearCache` never see — and returns those RDDs, whose
-    * reliable-checkpoint files (if any) outlive the blocks.
-    */
-  private[graft] def releaseCheckpoint(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] = {
-    val rdds = df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    rdds.foreach(_.unpersist(false))
-    rdds
-  }
-
   /** Rows per partition of an iterative frame: 4 M narrow two-long rows
     * ≈ 128 MB, inside the guide's 100 MB–1 GB sizing.
     */
@@ -787,6 +774,17 @@ object Dedup extends QueryModule {
     reliableDir.foreach(d => spark.sparkContext.setCheckpointDir(d))
     def materialize(df: DataFrame): DataFrame =
       if (reliableDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    // Releases the checkpoint blocks `df` reads — a localCheckpoint or
+    // checkpoint is an RDD-level cache that `unpersist` on the frame and
+    // `catalog.clearCache` never see — and returns those RDDs, whose
+    // reliable-checkpoint files (if any) outlive the blocks.
+    def releaseCheckpoint(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] = {
+      val rdds = df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      }
+      rdds.foreach(_.unpersist(false))
+      rdds
+    }
     def deleteFiles(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
       rdds.foreach(_.getCheckpointFile.foreach { f =>
         val p = new org.apache.hadoop.fs.Path(f)

@@ -1431,44 +1431,39 @@ object TextOps extends QueryModule {
     * that itself contains a brace is excluded up front (documented
     * contract, mirrored in the oracle).
     *
-    * Scale shape: the ONLY corpus-scale shuffle is the one word-frequency
-    * aggregate building the vocab (map-side partials; vocab is
-    * Heaps-sublinear in the corpus). Every round then runs on VOCAB rows —
-    * explode to adjacent pairs, partial-agg, TakeOrdered(1) — and on a real
-    * cluster ships kilobytes. Per round the new vocab is an EAGER
-    * localCheckpoint and its predecessor's blocks are released (the
-    * [[Dedup.labelPropagate]] discipline): lineage TRUNCATION is load-
-    * bearing here, not just caching — each round's merge pick feeds both
-    * the output row and the next vocab, so un-truncated plans double per
-    * round and the 2^K plan STRING alone OOMs the driver around round 10
-    * (persist keeps execution linear but not the logical plan). The K
-    * one-row merge frames stay checkpoint blocks only until the final
-    * union materializes into the returned cache.
+    * Scale shape: the loop state lives on the DRIVER (the
+    * [[graft.ops.Similarity.kmeansTrain]] shape). The ONLY corpus-scale
+    * shuffle is the one word-frequency aggregate building the framed
+    * vocabulary (map-side partials; vocab is Heaps-sublinear in the
+    * corpus), persisted once as the loop-invariant input. Each round is ONE
+    * collected aggregate on VOCAB rows — apply the merges learned so far,
+    * explode to adjacent pairs, partial-agg, TakeOrdered(1) — and ships
+    * kilobytes; its winner joins the driver's merge list and re-enters the
+    * next round's plan as two string literals, so every round's plan is
+    * the persisted vocabulary plus at most [[BpeMerges]] `replace` calls:
+    * linear in K, with no per-round state to checkpoint or release. The
+    * vocabulary is released before return and the K-row merge list is a
+    * local frame; nothing stays cached.
     */
   def bpeTrain(s: SparkSession, dir: String): DataFrame =
     bpeTrainOf(Tables.documents(s, dir))
 
-  /** The shared training loop: returns the K one-row merge frames, the
-    * FINAL vocabulary `(w, ws, f)` — original word, fully-merged framed
-    * symbol string, corpus frequency — all checkpoint frames the caller
-    * releases with [[Dedup.releaseCheckpoint]]. [[bpeTrainOf]] ships the
-    * merge list; [[bpeTokenizeOf]] ships the final vocab applied back to
-    * the corpus. Both release everything they don't return.
+  /** The shared training loop: the learned merges (step, lhs, rhs,
+    * pair_count) in step order. [[bpeTrainOf]] ships them; [[bpeTokenizeOf]]
+    * applies them back to the corpus.
     */
-  private def bpeLoop(docs: DataFrame): (Seq[DataFrame], DataFrame) = {
-    var vocab = docs
+  private def bpeMerges(docs: DataFrame): Seq[(Long, String, String, Long)] = {
+    val vocab = docs
       .select(explode(tokens(col("text"))).as("w"))
       .filter(!col("w").contains("{") && !col("w").contains("}"))
       .groupBy("w").agg(count(lit(1)).as("f"))
-      .select(col("w"), regexp_replace(col("w"), "(.)", "{$1}").as("ws"),
-        col("f")).localCheckpoint(true)
-    val tops = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var step = 1
+      .select(bpeFrame(col("w")).as("ws"), col("f"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var exhausted = false
-    while (step <= BpeMerges && !exhausted) {
+    while (merges.size < BpeMerges && !exhausted) {
       val top = vocab
-        .select(col("f"),
-          split(expr("substring(ws, 2, length(ws) - 2)"), "\\}\\{").as("s"))
+        .select(col("f"), bpeSymbols(bpeApply(col("ws"), merges.toSeq)).as("s"))
         .filter(size(col("s")) >= 2)
         .select(col("f"), col("s"),
           explode(sequence(lit(1), size(col("s")) - 1)).as("i"))
@@ -1477,38 +1472,31 @@ object TextOps extends QueryModule {
         .groupBy("lhs", "rhs").agg(sum("f").as("pair_count"))
         .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
         .limit(1)
-        .select(lit(step.toLong).as("step"), col("lhs"), col("rhs"),
-          col("pair_count")).localCheckpoint(true)
-      if (top.isEmpty) { Dedup.releaseCheckpoint(top); exhausted = true }
-      else {
-        tops += top
-        val next = vocab
-          .crossJoin(broadcast(top.select(col("lhs").as("ml"), col("rhs").as("mr"))))
-          .select(col("w"), expr("replace(ws, '{' || ml || '}{' || mr || '}'," +
-            " '{' || ml || mr || '}')").as("ws"), col("f")).localCheckpoint(true)
-        Dedup.releaseCheckpoint(vocab)
-        vocab = next
-        step += 1
-      }
+        .collect()
+      if (top.isEmpty) exhausted = true
+      else merges += ((merges.size + 1L, top(0).getString(0), top(0).getString(1),
+        top(0).getLong(2)))
     }
-    (tops.toSeq, vocab)
+    vocab.unpersist(false)
+    merges.toSeq
   }
 
-  private[graft] def bpeTrainOf(docs: DataFrame): DataFrame = {
-    val (tops, vocab) = bpeLoop(docs)
-    Dedup.releaseCheckpoint(vocab)
-    if (tops.isEmpty) {
-      import docs.sparkSession.implicits._
-      return Seq.empty[(Long, String, String, Long)]
-        .toDF("step", "lhs", "rhs", "pair_count")
+  /** A word as its framed single-character symbol string `{c}{c}…`. */
+  private def bpeFrame(w: Column): Column = regexp_replace(w, "(.)", "{$1}")
+
+  /** Applies learned merges to a framed symbol string, in step order. */
+  private def bpeApply(ws: Column, merges: Seq[(Long, String, String, Long)]): Column =
+    merges.foldLeft(ws) { case (c, (_, l, r, _)) =>
+      replace(c, lit(s"{$l}{$r}"), lit(s"{$l$r}"))
     }
-    // one regular cache holds the K-row merge list; the checkpoint blocks
-    // behind it release right after (the labelPropagate fin pattern)
-    val out = tops.reduce(_ union _).orderBy("step")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    tops.foreach(Dedup.releaseCheckpoint)
-    out
+
+  /** A framed symbol string's symbols, in order. */
+  private def bpeSymbols(ws: Column): Column =
+    split(ws.substr(lit(2), length(ws) - 2), "\\}\\{")
+
+  private[graft] def bpeTrainOf(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    bpeMerges(docs).toDF("step", "lhs", "rhs", "pair_count")
   }
 
   // -------------------------------------------------------- txt_bpe_tokenize
@@ -1519,33 +1507,31 @@ object TextOps extends QueryModule {
     * BPE tokens after the K merges, characters, BPE-per-word fertility,
     * chars-per-BPE-token.
     *
-    * The corpus is never re-scanned per merge: the final vocabulary
-    * already holds every word's fully-merged symbol string, so encoding is
-    * a JOIN — corpus word counts (one map-side-partial aggregate keyed on
-    * (lang, word), output vocab-sublinear × languages) against the
-    * per-word symbol count, then a per-language rollup. Brace-carrying
-    * words are excluded from training and statistics alike (the
-    * documented contract, mirrored in the oracle).
+    * The corpus is never re-scanned per merge: the learned merges are K
+    * string-literal pairs, so a word's BPE token count is a row-wise
+    * expression of the word itself — frame it, apply the K `replace`
+    * calls in step order, count the symbols. Encoding is then one
+    * map-side-partial aggregate keyed on (lang, word) (output
+    * vocab-sublinear × languages), the per-word symbol count on its rows,
+    * and a per-language rollup. Brace-carrying words are excluded from
+    * training and statistics alike (the documented contract, mirrored in
+    * the oracle).
     *
     * Scale shape: the ONLY corpus-scale shuffle is the (lang, word)
-    * aggregate; the join and rollup run on vocab-scale rows
-    * (shuffle-hash, no sort); zero windows. One cached frame (the bounded
-    * output); every loop checkpoint releases before return.
+    * aggregate; no join and zero windows. Nothing cached: the training
+    * loop releases its vocabulary before the lazy output is built.
     */
   def bpeTokenize(s: SparkSession, dir: String): DataFrame =
     bpeTokenizeOf(Tables.documents(s, dir))
 
   private[graft] def bpeTokenizeOf(docs: DataFrame): DataFrame = {
-    val (tops, vocab) = bpeLoop(docs)
-    tops.foreach(Dedup.releaseCheckpoint)
-    val nsyms = vocab.select(col("w"),
-      size(split(expr("substring(ws, 2, length(ws) - 2)"), "\\}\\{"))
-        .cast("long").as("n_syms"))
-    val out = docs
+    val merges = bpeMerges(docs)
+    docs
       .select(col("lang"), explode(tokens(col("text"))).as("w"))
       .filter(!col("w").contains("{") && !col("w").contains("}"))
       .groupBy("lang", "w").agg(count(lit(1)).as("c"))
-      .join(nsyms.hint("shuffle_hash"), "w")
+      .select(col("lang"), col("w"), col("c"),
+        size(bpeSymbols(bpeApply(bpeFrame(col("w")), merges))).cast("long").as("n_syms"))
       .groupBy("lang")
       .agg(sum("c").as("n_tokens"),
         sum(col("c") * col("n_syms")).as("bpe_tokens"),
@@ -1557,10 +1543,6 @@ object TextOps extends QueryModule {
         round(col("n_chars").cast("double") / col("bpe_tokens"), 4)
           .as("chars_per_bpe"))
       .orderBy("lang")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    Dedup.releaseCheckpoint(vocab)
-    out
   }
 
   // ------------------------------------------------------ txt_unigram_train
@@ -1629,10 +1611,10 @@ object TextOps extends QueryModule {
     out.result()
   }
 
-  /** Viterbi-segment every vocab word under the one-row probability map
-    * `pm` (column `m`): returns (w, f, pieces). One broadcast of an
-    * ~(|chars| + [[UniSeedKeep]])-entry map, vocab-scale expression work,
-    * zero shuffles.
+  /** Viterbi-segment every vocab word under the piece → probability
+    * `model`: returns (w, f, pieces). The ~(|chars| + [[UniSeedKeep]])-entry
+    * model enters the plan as one map literal; vocab-scale expression
+    * work, zero shuffles.
     *
     * Each chain expression lands in its OWN projection (withColumn), so a
     * reference like `dp7` stays an attribute of the previous layer. A
@@ -1644,9 +1626,9 @@ object TextOps extends QueryModule {
     * keeps the layers apart because every dp/pos alias is non-cheap and
     * multiply-referenced.
     */
-  private def segmentWords(vocab: DataFrame, pm: DataFrame): DataFrame = {
+  private def segmentWords(vocab: DataFrame, model: Map[String, Double]): DataFrame = {
     val pieces = (1 to UniWordMax).map("pc" + _).mkString("array(", ", ", ")")
-    var df = vocab.crossJoin(broadcast(pm))
+    var df = vocab.select(col("*"), typedLit(model).as("m"))
     // BATCHED application (r19): every Dataset transformation re-runs the
     // analyzer over the whole accumulated plan, so one withColumn per
     // alias made chain construction quadratic in the ~75-layer DP — the
@@ -1677,14 +1659,15 @@ object TextOps extends QueryModule {
       .select("w", "f", "pieces")
   }
 
-  /** Piece table (piece, cnt) → one-row broadcastable probability map:
-    * p = cnt / Σcnt, the single double division per piece.
+  /** Piece table (piece, cnt) → the probability model p = cnt / Σcnt, the
+    * single double division per piece. Entries are sorted by piece so the
+    * literal, and the plan that carries it, is the same every run.
     */
-  private def pieceMap(pieces: DataFrame): DataFrame =
-    pieces.crossJoin(broadcast(pieces.groupBy().agg(sum("cnt").as("t"))))
-      .select(col("piece"), (col("cnt").cast("double") / col("t")).as("p"))
-      .groupBy()
-      .agg(map_from_entries(collect_list(struct(col("piece"), col("p")))).as("m"))
+  private def uniModel(pieces: Seq[(String, Long)]): Map[String, Double] = {
+    val t = pieces.map(_._2).sum
+    scala.collection.immutable.ListMap(
+      pieces.sortBy(_._1).map { case (p, c) => p -> c.toDouble / t }: _*)
+  }
 
   /** The unigram-LM training loop (SentencePiece-style hard-EM + prune —
     * the second real tokenizer family beside [[bpeTrain]]'s merge learner):
@@ -1696,24 +1679,35 @@ object TextOps extends QueryModule {
     * to all chars (add-one smoothed — the coverage floor SentencePiece
     * guarantees, so no word ever loses its last path) + the top
     * [[UniPruneKeep]] multi-char; re-segment under the pruned model.
-    * Returns the final segmentation (w, f, pieces) + the checkpoint
-    * release hook.
+    * Hands the final segmentation (w, f, pieces) to `consume` and returns
+    * its result; everything the loop persisted is released after it.
     *
-    * Scale shape: the ONLY corpus-scale shuffle is the word-frequency
-    * aggregate (map-side partials, vocab Heaps-sublinear — the bpeLoop
-    * shape); seeding explodes VOCAB rows ≤ [[UniWordMax]]·[[UniPieceMax]]
-    * ways; each EM round is vocab-scale expression work under a broadcast
-    * ~70-entry map, and the piece tables are eager localCheckpoints whose
-    * predecessors release per round (the [[Dedup.labelPropagate]]
-    * discipline). Words longer than [[UniWordMax]] chars are excluded
-    * from training and readouts alike (documented contract, mirrored in
-    * the oracle).
+    * Scale shape: the loop state lives on the DRIVER (the [[bpeTrain]]
+    * shape). The ONLY corpus-scale shuffle is the word-frequency aggregate
+    * (map-side partials, vocab Heaps-sublinear), persisted once as the
+    * loop-invariant input. Each piece table is ONE collected aggregate of
+    * ≤ |chars| + [[UniSeedKeep]] rows — the seed's substring counts
+    * (vocab rows exploded ≤ [[UniWordMax]]·[[UniPieceMax]] ways), then the
+    * round-1 usage counts in (count desc, piece asc) order, whose
+    * multi-char prefix is the prune. The driver sums each table and
+    * divides ([[uniModel]]), and the model re-enters the plan as a map
+    * literal, so each EM round is vocab-scale expression work with no join
+    * and no broadcast. Each segmentation is persisted BEFORE anything
+    * explodes it: InferFiltersFromGenerate plants a size(pieces) > 0
+    * predicate under the explode, and predicate pushdown would then
+    * substitute it down the 70-layer chain — re-inlining the DP recurrence
+    * exponentially (the exact blowup the layering exists to prevent).
+    * Cached-data substitution happens before optimization, so the cached
+    * chain is a plan leaf and the inferred filter stops there. Words
+    * longer than [[UniWordMax]] chars are excluded from training and
+    * readouts alike (documented contract, mirrored in the oracle).
     */
-  private def uniLoop(docs: DataFrame): (DataFrame, () => Unit) = {
+  private def uniLoop[A](docs: DataFrame)(consume: DataFrame => A): A = {
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val vocab = docs
       .select(explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")).between(1, UniWordMax))
-      .groupBy("w").agg(count(lit(1)).as("f")).localCheckpoint(true)
+      .groupBy("w").agg(count(lit(1)).as("f")).persist(MEMORY_AND_DISK)
     val subs = vocab
       .select(col("w"), col("f"),
         explode(sequence(lit(1), length(col("w")))).as("s"))
@@ -1722,59 +1716,51 @@ object TextOps extends QueryModule {
       .filter(col("s") + col("l") - 1 <= length(col("w")))
       .select(expr("substring(w, s, l)").as("piece"), col("f"))
       .groupBy("piece").agg(sum("f").as("cnt"))
-    val chars0 = subs.filter(length(col("piece")) === 1)
-    val multi0 = subs.filter(length(col("piece")) >= 2)
-      .orderBy(col("cnt").desc, col("piece").asc).limit(UniSeedKeep)
-    val pieces0 = chars0.unionAll(multi0).localCheckpoint(true)
-    // Each segmentation is checkpointed BEFORE anything explodes it:
-    // InferFiltersFromGenerate plants a size(pieces) > 0 predicate under
-    // the explode, and predicate pushdown would then substitute it down
-    // the 70-layer chain — re-inlining the DP recurrence exponentially
-    // (the exact blowup the layering exists to prevent). The checkpoint
-    // makes the chain a leaf, so the inferred filter stops there; it also
-    // guarantees the segmentation pass executes exactly once per round.
-    val seg1 = segmentWords(vocab, pieceMap(pieces0)).localCheckpoint(true)
-    val counts1 = seg1
+      .select(col("piece"), col("cnt"), length(col("piece")).as("len"))
+    def table(df: DataFrame): Seq[(String, Long, Int)] =
+      df.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
+    val seed = table(subs.filter(col("len") === 1)
+      .unionAll(subs.filter(col("len") >= 2)
+        .orderBy(col("cnt").desc, col("piece").asc).limit(UniSeedKeep)))
+    val seg1 = segmentWords(vocab, uniModel(seed.map(p => (p._1, p._2))))
+      .persist(MEMORY_AND_DISK)
+    val used = table(seg1
       .select(col("f"), explode(col("pieces")).as("piece"))
       .groupBy("piece").agg(sum("f").as("cnt"))
-    val chars1 = pieces0.filter(length(col("piece")) === 1).select("piece")
-      .join(counts1, Seq("piece"), "left")
-      .select(col("piece"), (coalesce(col("cnt"), lit(0L)) + 1L).as("cnt"))
-    val multi1 = counts1.filter(length(col("piece")) >= 2)
-      .orderBy(col("cnt").desc, col("piece").asc).limit(UniPruneKeep)
-    val pieces1 = chars1.unionAll(multi1).localCheckpoint(true)
-    Dedup.releaseCheckpoint(pieces0)
-    Dedup.releaseCheckpoint(seg1)
-    val seg2 = segmentWords(vocab, pieceMap(pieces1)).localCheckpoint(true)
-    Dedup.releaseCheckpoint(pieces1)
-    (seg2, () => { Dedup.releaseCheckpoint(seg2); Dedup.releaseCheckpoint(vocab) })
+      .orderBy(col("cnt").desc, col("piece").asc)
+      .select(col("piece"), col("cnt"), length(col("piece")).as("len")))
+    seg1.unpersist(false)
+    val uses = used.map(p => p._1 -> p._2).toMap
+    val chars = seed.filter(_._3 == 1).map(p => (p._1, uses.getOrElse(p._1, 0L) + 1L))
+    val multi = used.filter(_._3 >= 2).take(UniPruneKeep).map(p => (p._1, p._2))
+    val seg2 = segmentWords(vocab, uniModel(chars ++ multi)).persist(MEMORY_AND_DISK)
+    try consume(seg2)
+    finally { seg2.unpersist(false); vocab.unpersist(false) }
   }
 
   /** Unigram-LM tokenizer training — emits the learned piece inventory
     * (piece, length, usage count under the final model, probability): the
     * artifact a unigram tokenizer ships, the way [[bpeTrain]] ships its
     * merge list. See [[uniLoop]] for the algorithm and scale shape and
-    * [[uniSegExprs]] for the cross-engine determinism argument.
+    * [[uniSegExprs]] for the cross-engine determinism argument. The final
+    * usage counts are one more collected aggregate of the same bounded
+    * size; the readout is a local frame, so nothing stays cached.
     */
   def unigramTrain(s: SparkSession, dir: String): DataFrame =
     unigramTrainOf(Tables.documents(s, dir))
 
   private[graft] def unigramTrainOf(docs: DataFrame): DataFrame = {
-    val (seg2, release) = uniLoop(docs)
-    // counts2 feeds its own total AND the per-piece rows; both branches
-    // re-aggregate the CHECKPOINTED segmentation blocks — cheap by design
-    val counts2 = seg2
+    import docs.sparkSession.implicits._
+    val uses = uniLoop(docs)(seg2 => seg2
       .select(col("f"), explode(col("pieces")).as("piece"))
       .groupBy("piece").agg(sum("f").as("n_uses"))
-    val out = counts2
-      .crossJoin(broadcast(counts2.groupBy().agg(sum("n_uses").as("t"))))
+      .as[(String, Long)].collect().toSeq)
+    val t = uses.map(_._2).sum
+    uses.toDF("piece", "n_uses")
       .select(col("piece"), length(col("piece")).cast("int").as("len"),
         col("n_uses"),
-        round(col("n_uses").cast("double") / col("t"), 6).as("prob"))
+        round(col("n_uses").cast("double") / lit(t), 6).as("prob"))
       .orderBy(col("n_uses").desc, col("piece").asc)
-    val fin = Dedup.materializeThenRelease(out)
-    release()
-    fin
   }
 
   // -------------------------------------------------- txt_unigram_fertility
@@ -1782,16 +1768,16 @@ object TextOps extends QueryModule {
   /** The unigram tokenizer's fertility readout — [[fertility]]'s
     * per-(lang, source) equity table, but under the TRAINED [[uniLoop]]
     * model instead of the regex piece proxy: pieces per word, characters
-    * per piece. The corpus is never re-segmented row by row — the final
-    * vocabulary already holds every word's piece count, so application is
-    * a vocab-scale join against one (lang, source, word) aggregate (the
-    * bpeTokenize shape).
+    * per piece. The corpus is never re-segmented row by row — the loop's
+    * final segmentation already holds every vocabulary word's piece count,
+    * so application is a vocab-scale join against one (lang, source, word)
+    * aggregate. The output materializes into its own cache before the loop
+    * releases the segmentation.
     */
   def unigramFertility(s: SparkSession, dir: String): DataFrame =
     unigramFertilityOf(Tables.documents(s, dir))
 
-  private[graft] def unigramFertilityOf(docs: DataFrame): DataFrame = {
-    val (seg2, release) = uniLoop(docs)
+  private[graft] def unigramFertilityOf(docs: DataFrame): DataFrame = uniLoop(docs) { seg2 =>
     val np = seg2.select(col("w"), size(col("pieces")).cast("long").as("np"))
     val out = docs
       .select(col("lang"), col("source"), explode(tokens(col("text"))).as("w"))
@@ -1808,9 +1794,7 @@ object TextOps extends QueryModule {
         round(col("n_chars").cast("double") / col("n_pieces"), 6)
           .as("chars_per_piece"))
       .orderBy("lang", "source")
-    val fin = Dedup.materializeThenRelease(out)
-    release()
-    fin
+    Dedup.materializeThenRelease(out)
   }
 
   // ---------------------------------------------------------- txt_hash_embed
@@ -1883,16 +1867,16 @@ object TextOps extends QueryModule {
     * dominant dimension (argmax |w|, smaller dim on ties — the
     * [[hashEmbed]] packed-key ordering).
     *
-    * Scale shape: the feature frame is built ONCE (two map-side-partial
-    * hash aggregates) and persisted; each round is one broadcast join
-    * against the ≤ [[EmbedDim]]-row weight vector + one per-doc partial
-    * agg, then a misclassified-set join back to the cached features for the
-    * Δw fold onto [[EmbedDim]] keys. Weights and bias are EAGER
-    * localCheckpoints per round (the [[bpeLoop]] lineage-truncation
-    * discipline); the misclassified frame is checkpointed per round because
-    * two consumers (bias delta, Δw) would otherwise re-run the scoring join.
-    * State is bounded by EmbedDim + 1 regardless of corpus size; nothing is
-    * ever collected to the driver.
+    * Scale shape: the loop state — [[EmbedDim]] weights and the bias —
+    * lives on the DRIVER (the [[bpeTrain]] shape). The labelled feature
+    * rows ([[perceptronLoop]]) are built ONCE by one map-side-partial
+    * aggregate and persisted. Each round is ONE collected global aggregate
+    * over them: the weights enter as a literal array, each document's
+    * margin is a native [[graft.functions.ArrayDot]] of its dense feature
+    * vector, and the misclassified rows fold into Σ y·x per dimension, Σ y
+    * and their count — a single row, whatever the corpus size. The driver
+    * applies the update and computes the trace row; the trace is a local
+    * frame, so nothing stays cached.
     */
   def classifierTrain(s: SparkSession, dir: String): DataFrame =
     classifierTrainOf(Tables.documents(s, dir))
@@ -1909,88 +1893,51 @@ object TextOps extends QueryModule {
     when(conv(substring(md5(t), 9, 1), 16, 10).cast("long") % 2 === 0,
       lit(1L)).otherwise(lit(-1L))
 
-  /** Everything the perceptron loop leaves behind: the persisted feature /
-    * label frames, the final checkpointed weight + bias state, the lazy
-    * per-round trace frames, and one hook releasing all of it (called by
-    * the consumer AFTER its own output materializes).
+  /** The batch perceptron: builds the labelled feature rows (doc_id, y,
+    * xv) — xv the document's dense [[EmbedDim]]-long hashing-trick vector,
+    * y its domain label, one row per document (empty text gives the zero
+    * vector) — persists them, runs [[PerceptronRounds]] rounds, and hands
+    * the rows, the final weights, the final bias and the per-round trace
+    * (round, n_mistakes, bias, w_l1, w_l2sq, top_dim) to `consume`; the
+    * rows are released after it returns.
     */
-  private case class PerceptronState(
-      comps: DataFrame, lbl: DataFrame, w: DataFrame, st: DataFrame,
-      trace: Seq[DataFrame], release: () => Unit)
-
-  private def perceptronLoop(docs: DataFrame): PerceptronState = {
-    val spark = docs.sparkSession
-    // comps cached PRE-PARTITIONED on doc_id (r19, guide §2.4): every
-    // round's scoring aggregate (groupBy doc_id) and the misclassified-set
-    // join back (on doc_id) then reuse the cached distribution — two
-    // exchanges per round gone for the whole loop. Partition count derived
-    // from the metadata-cheap doc count (≤ EmbedDim rows/doc bounds the
-    // frame), and the cache populates eagerly so the round-1 checkpoint
-    // job doesn't interleave the corpus tokenize with loop stages.
-    val nDocs = docs.select("doc_id").count()
-    val comps = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-      .select(col("doc_id"), featDim(col("t")).as("dim"),
-        featSign(col("t")).as("s"))
-      .groupBy("doc_id", "dim").agg(sum("s").as("x"))
-      .filter(col("x") =!= 0)
-      .repartition(graft.ops.Dedup.adaptiveParts(nDocs * EmbedDim),
-        col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    comps.count()
-    val lbl = docs.select(col("doc_id"),
+  private def perceptronLoop[A](docs: DataFrame)(
+      consume: (DataFrame, Seq[Long], Long, Seq[(Long, Long, Long, Long, Long, Long)]) => A): A = {
+    graft.functions.ArrayDot.register(docs.sparkSession)
+    val rows = docs
+      .select(col("doc_id"),
         when(pmod(substring(col("source"), 4, 10).cast("int"), lit(4)) === 0,
-          lit(1L)).otherwise(lit(-1L)).as("y"))
+          lit(1L)).otherwise(lit(-1L)).as("y"),
+        explode_outer(tokens(col("text"))).as("t"))
+      .select(col("doc_id"), col("y"), featDim(col("t")).as("dim"),
+        featSign(col("t")).as("s"))
+      .groupBy("doc_id", "y")
+      .agg(array((0 until EmbedDim).map(d =>
+        sum(when(col("dim") === d, col("s")).otherwise(0L))): _*).as("xv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var w = spark.range(EmbedDim.toLong)
-      .select(col("id").as("dim"), lit(0L).as("wv")).localCheckpoint(true)
-    var st = spark.range(1).select(lit(0L).as("bias"), lit(0L).as("nm"))
-      .localCheckpoint(true)
-    // trace rows stay LAZY over the checkpointed state frames; everything
-    // they reference is released only after the final union materializes
-    val trace = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val state = scala.collection.mutable.ArrayBuffer[DataFrame](w, st)
-    for (round <- 1 to PerceptronRounds) {
-      val dots = comps.join(broadcast(w), "dim")
-        .groupBy("doc_id").agg(sum(col("wv") * col("x")).as("dot"))
-      val mis = lbl.join(dots, Seq("doc_id"), "left")
-        .crossJoin(broadcast(st.select("bias")))
-        .filter(col("y") * (coalesce(col("dot"), lit(0L)) + col("bias")) <= 0)
-        .select("doc_id", "y").localCheckpoint(true)
-      val stNext = st.select("bias").crossJoin(
-          broadcast(mis.agg(coalesce(sum("y"), lit(0L)).as("dy"),
-            count(lit(1)).as("nm"))))
-        .select((col("bias") + col("dy")).as("bias"), col("nm")).localCheckpoint(true)
-      val dw = mis.join(comps, "doc_id")
-        .groupBy("dim").agg(sum(col("y") * col("x")).as("dw"))
-      val wNext = w.join(dw, Seq("dim"), "left")
-        .select(col("dim"), (col("wv") + coalesce(col("dw"), lit(0L))).as("wv"))
-        .localCheckpoint(true)
-      Dedup.releaseCheckpoint(mis)
-      w = wNext; st = stNext
-      state += w; state += st
-      val key = abs(col("wv")) * lit(EmbedDim.toLong) +
-        (lit((EmbedDim - 1).toLong) - col("dim"))
-      trace += w.agg(sum(abs(col("wv"))).as("w_l1"),
-          sum(col("wv") * col("wv")).as("w_l2sq"),
-          max_by(col("dim"), key).as("top_dim"))
-        .crossJoin(broadcast(st))
-        .select(lit(round.toLong).as("round"), col("nm").as("n_mistakes"),
-          col("bias"), col("w_l1"), col("w_l2sq"), col("top_dim"))
+    val w = Array.fill(EmbedDim)(0L)
+    var bias = 0L
+    val trace = (1 to PerceptronRounds).map { round =>
+      // mistakes are scored with the PRE-update weights; sign(0) is one
+      val fold = rows
+        .filter(col("y") * (Similarity.idot(col("xv"), typedLit(w.toSeq)) + bias) <= 0)
+        .agg(count(lit(1)), coalesce(sum("y"), lit(0L)) +: (0 until EmbedDim).map(d =>
+          coalesce(sum(col("y") * col("xv")(d)), lit(0L))): _*)
+        .head()
+      for (d <- 0 until EmbedDim) w(d) += fold.getLong(2 + d)
+      bias += fold.getLong(1)
+      val top = (0 until EmbedDim).maxBy(d => math.abs(w(d)) * EmbedDim + (EmbedDim - 1 - d))
+      (round.toLong, fold.getLong(0), bias, w.map(math.abs).sum, w.map(v => v * v).sum,
+        top.toLong)
     }
-    PerceptronState(comps, lbl, w, st, trace.toSeq, () => {
-      comps.unpersist(false); lbl.unpersist(false)
-      state.foreach(Dedup.releaseCheckpoint)
-    })
+    try consume(rows, w.toSeq, bias, trace)
+    finally rows.unpersist(false)
   }
 
   private[graft] def classifierTrainOf(docs: DataFrame): DataFrame = {
-    val ps = perceptronLoop(docs)
-    val out = ps.trace.reduce(_ union _).orderBy("round")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    ps.release()
-    out
+    import docs.sparkSession.implicits._
+    perceptronLoop(docs)((_, _, _, trace) => trace)
+      .toDF("round", "n_mistakes", "bias", "w_l1", "w_l2sq", "top_dim")
   }
 
   // ----------------------------------------------------- txt_classifier_score
@@ -2004,33 +1951,27 @@ object TextOps extends QueryModule {
     * `score` to filter or up-weight — emitting the margin rather than a
     * keep bit keeps the operator composable with any threshold.
     *
-    * Scale shape: training state is bounded (≤ [[EmbedDim]] + 1 rows), so
-    * scoring is ONE broadcast join of the cached feature frame against the
-    * final weight vector + a per-doc partial agg — no corpus re-tokenize
-    * (the loop's persisted `comps` is reused) and no extra shuffle beyond
-    * the per-doc fold; label rows left-join the scores so feature-less
-    * (empty-text) docs score bias-only instead of dropping out.
+    * Scale shape: training state is bounded (≤ [[EmbedDim]] + 1 numbers),
+    * so scoring is ONE row-wise native dot product of the loop's persisted
+    * feature rows against the literal final weights — no join, no
+    * aggregate, no corpus re-tokenize. Feature-less (empty-text) docs hold
+    * the zero vector and score bias-only instead of dropping out. The
+    * output materializes into its own cache before the feature rows are
+    * released.
     */
   def classifierScore(s: SparkSession, dir: String): DataFrame =
     classifierScoreOf(Tables.documents(s, dir))
 
-  private[graft] def classifierScoreOf(docs: DataFrame): DataFrame = {
-    val ps = perceptronLoop(docs)
-    val dots = ps.comps.join(broadcast(ps.w), "dim")
-      .groupBy("doc_id").agg(sum(col("wv") * col("x")).as("dot"))
-    val out = ps.lbl.join(dots, Seq("doc_id"), "left")
-      .crossJoin(broadcast(ps.st.select("bias")))
-      .select(col("doc_id"), col("y"),
-        (coalesce(col("dot"), lit(0L)) + col("bias")).as("score"))
-      .withColumn("pred", when(col("score") > 0, lit(1L)).otherwise(lit(-1L)))
-      .withColumn("correct",
-        when(col("pred") === col("y"), lit(1L)).otherwise(lit(0L)))
-      .orderBy("doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    ps.release()
-    out
-  }
+  private[graft] def classifierScoreOf(docs: DataFrame): DataFrame =
+    perceptronLoop(docs) { (rows, w, bias, _) =>
+      Dedup.materializeThenRelease(rows
+        .select(col("doc_id"), col("y"),
+          (Similarity.idot(col("xv"), typedLit(w)) + bias).as("score"))
+        .withColumn("pred", when(col("score") > 0, lit(1L)).otherwise(lit(-1L)))
+        .withColumn("correct",
+          when(col("pred") === col("y"), lit(1L)).otherwise(lit(0L)))
+        .orderBy("doc_id"))
+    }
 
   /** The deployable classifier artifact: ONE row carrying the final weight
     * vector as a `map<dim, wv>` plus the bias — what a serving path ships
@@ -2039,18 +1980,14 @@ object TextOps extends QueryModule {
     * contribute zero either way), a scorer holding this row needs NO
     * feature aggregation at all: scoring is a per-row fold, stateless and
     * shuffle-free — the shape [[graft.streaming.Streaming.scoredDocsStreaming]]
-    * exploits on the ingest firehose.
+    * exploits on the ingest firehose. Both come from the driver's loop
+    * state as literals; nothing is cached.
     */
   private[graft] def trainedScorerOf(docs: DataFrame): DataFrame = {
-    val ps = perceptronLoop(docs)
-    val out = ps.w
-      .agg(map_from_entries(collect_list(struct(col("dim"), col("wv"))))
-        .as("wmap"))
-      .crossJoin(broadcast(ps.st.select("bias")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    ps.release()
-    out
+    val (w, bias) = perceptronLoop(docs)((_, w, bias, _) => (w, bias))
+    docs.sparkSession.range(1)
+      .select(typedLit(w.indices.map(d => d.toLong -> w(d)).toMap).as("wmap"),
+        lit(bias).as("bias"))
   }
 
   // -------------------------------------------------------- txt_heaps_law
@@ -2230,7 +2167,7 @@ object TextOps extends QueryModule {
     * zips adjacent symbols positionally.
     */
   /** The shared unrolled-CTE training chain (v0 … v[[BpeMerges]]), the
-    * oracle twin of [[bpeLoop]]; `carryW` threads the original word
+    * oracle twin of [[bpeMerges]]; `carryW` threads the original word
     * through the merge rounds for the tokenize oracle's final join.
     */
   private def bpeChainSql(carryW: Boolean): String = {

@@ -237,7 +237,8 @@ class OpsSpec extends AnyFunSuite {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     // independent reference perceptron (string-side md5 hashing, mutable
     // arrays) re-stated compactly; exercises the edges the fixture can't
-    // enumerate: empty docs, single-class corpora, zero-sum features,
+    // enumerate: the empty corpus (every round: no mistakes, zero weights,
+    // top_dim 0), empty docs, single-class corpora, zero-sum features,
     // sign(0) ties on both the mistake rule and the argmax packing
     val D = 64
     def reference(corpus: Seq[(Long, String, String)]) = {
@@ -267,7 +268,7 @@ class OpsSpec extends AnyFunSuite {
     val tokenGen = Gen.oneOf("aa", "bb", "cc", "dd", "ee", "ff", "gg")
     val docGen = Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, tokenGen)).map(_.mkString(" "))
     val srcGen = Gen.choose(0, 5).map(i => s"src$i")
-    val corpusGen = Gen.choose(2, 6)
+    val corpusGen = Gen.choose(0, 6)
       .flatMap(k => Gen.listOfN(k, Gen.zip(srcGen, docGen)))
       .map(_.zipWithIndex.map { case ((s, t), i) => (i.toLong + 1, s, t) })
     val prop = Prop.forAll(corpusGen) { corpus =>
@@ -3063,6 +3064,14 @@ class OpsSpec extends AnyFunSuite {
     val got = TextOps.unigramTrainOf(docs)
       .as[(String, Int, Long, Double)].collect().toSeq
     assert(got === Seq(("xy", 2, 6L, 0.857143), ("x", 1, 1L, 0.142857)))
+    // the empty corpus (and one of only blank text) has no vocabulary: the
+    // inventory and the fertility readout are empty, not an error
+    for (texts <- Seq(Seq.empty[String], Seq("", "   "))) {
+      val none = texts.zipWithIndex.map { case (t, i) => (i.toLong, "en", "web", t) }
+        .toDF("doc_id", "lang", "source", "text")
+      assert(TextOps.unigramTrainOf(none).count() === 0)
+      assert(TextOps.unigramFertilityOf(none).count() === 0)
+    }
   }
 
   test("txt_unigram_fertility: word-length cap and per-slice rollup") {
@@ -3103,8 +3112,10 @@ class OpsSpec extends AnyFunSuite {
     import spark.implicits._
     val wordGen = Gen.choose(1, 6).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf('a', 'b', 'c')).map(_.mkString))
-    val docGen = Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, wordGen)).map(_.mkString(" "))
-    val corpusGen = Gen.choose(2, 5).flatMap(k => Gen.listOfN(k, docGen))
+    // 0 documents and empty-text documents included: no merge is learned
+    // and the per-language rollup simply has no row for them
+    val docGen = Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, wordGen)).map(_.mkString(" "))
+    val corpusGen = Gen.choose(0, 5).flatMap(k => Gen.listOfN(k, docGen))
       .map(_.zipWithIndex.map { case (t, i) =>
         (i.toLong + 1, if (i % 2 == 0) "en" else "de", t)
       })

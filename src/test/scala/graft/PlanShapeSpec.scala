@@ -25,9 +25,10 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   /** Queries whose plans intentionally contain a BroadcastNestedLoopJoin
     * against a side that is SMALL BY CONSTRUCTION (not merely small at this
     * SF): the ≤ 10-row centroid/codebook tables (sim_*), and the 1-row
-    * threshold scalar (ev_range_join). sim_kmeans_train is NOT here: its
-    * centroids are driver-side literals scored row-wise, so no join of any
-    * kind remains in its plan.
+    * threshold scalar (ev_range_join). sim_kmeans_train, the classifier
+    * pair and the unigram pair are NOT here: their loop state (centroids,
+    * weights and bias, piece probabilities) enters the plan as driver-side
+    * literals, so no scalar is crossed in.
     */
   private val bnljByDesign = Set(
     "sim_brute_topk", "sim_lsh_topk", // broadcast 8-query set joins are equi,
@@ -59,9 +60,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "sim_recall_ivfpq", // composes brute + IVF-PQ, both bounded as above
     "sim_recall_graph", // composes brute + graph search, both bounded as above
     "dd_lsh_recall", // 1-row n_true × 1-row n_found audit scalars
-    "txt_classifier_train", // 1-row bias/mistake scalars crossed per round
-    "txt_classifier_score", // same loop + the 1-row final-bias scalar
-    "pipe_classified", // the score loop + the 1-row tercile-cutoff scalar
+    "pipe_classified", // 1-row tercile-cutoff scalar over the classifier margins
     "q_histogram", // 1-row cents-extremes scalar broadcast (bucket index)
     "ev_rfm", // 1-row date-anchor + 1-row quintile-cutoff scalar broadcasts
     "pipe_epoch_plan", // 1-row Σa + spare-seat scalars over the bounded cell table
@@ -69,10 +68,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "sim_outlier_prune", // same bounded centroid-broadcast subtree as sim_ivf_*
     "ev_cohort_ltv", // 1-row corpus-min date-anchor scalar broadcast
     "ev_ols_trend", // 1-row corpus-min day-anchor scalar broadcast
-    "q_bloom_audit", // 1-row bits-set + dim-count readout scalar broadcasts
-    // 1-row piece-probability-map + Σuses scalar broadcasts (the unigram
-    // trainer's map and normalizer — both bounded by the piece inventory)
-    "txt_unigram_train", "txt_unigram_fertility")
+    "q_bloom_audit") // 1-row bits-set + dim-count readout scalar broadcasts
 
   test("q_tpch_q10: quarter and return-flag predicates reach the parquet scans") {
     val plan = graft.ops.Relational.tpchQ10(spark, dir)
@@ -241,6 +237,20 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("sim_kmeans_train: build + noop write runs in at most 10 jobs and leaves nothing cached") {
     // two refit aggregates collected to the driver plus the sorted write
     assertJobsAndNoCache(10)(graft.ops.Similarity.kmeansTrain(spark, dir))
+  }
+
+  test("txt_bpe_train: merges collected to the driver, at most 24 jobs, nothing cached") {
+    // the framed vocabulary is persisted once; each of the 10 rounds is one
+    // collected top-1 aggregate (its shuffle map stage and its result) and
+    // the merge list is a local frame
+    assertJobsAndNoCache(24)(graft.ops.TextOps.bpeTrain(spark, dir))
+  }
+
+  test("txt_classifier_train: weights held on the driver, at most 14 jobs, nothing cached") {
+    // the feature rows are persisted once; each of the 5 rounds is one
+    // collected global aggregate (its shuffle map stage and its result) and
+    // the trace is a local frame
+    assertJobsAndNoCache(14)(graft.ops.TextOps.classifierTrain(spark, dir))
   }
 
   test("txt_winnowing: map-only up to its final sort, at most 4 jobs, nothing cached") {

@@ -13,8 +13,8 @@ sweep    builds DIR's ScaleUp replica of --factor (default 100) under
          tools/assemble_scaling.py comparison to FILE (default
          bench_scaling.json).
 cluster  graft.tools.ClusterCheck bench on DIR: the query set on a
-         local-cluster master and on local[8]; FILE defaults to
-         bench_cluster.json.
+         local-cluster master of 2 workers x max(1, cores/2) cores and on
+         local[2 x max(1, cores/2)]; FILE defaults to bench_cluster.json.
 
 Cores and heap come from the box: every core this process may run on, and
 half the physical memory. Nothing may recompile target/scala-2.13/classes
