@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructField,
+  StructType}
 import graft.{QueryModule, Tables}
 
 /** Similarity search over the `embeddings` table (SURVEY §7.2 step 6):
@@ -113,7 +115,7 @@ object Similarity extends QueryModule {
     * product array); identical null semantics and fold order, so oracle
     * hashes are unchanged. Callers must hold a session where
     * [[graft.functions.ArrayDot.register]] has run ([[corpus]] /
-    * [[assignments]] do this).
+    * [[labelled]] do this).
     */
   private[ops] def idot(a: Column, b: Column): Column =
     call_function("array_dot", a, b)
@@ -122,9 +124,11 @@ object Similarity extends QueryModule {
   private[ops] def inorm2(a: Column): Column =
     call_function("array_dot", a, a)
 
-  /** cosine from integer dot/norms — one deterministic double expression. */
+  /** cosine from integer dot/norms — one deterministic double expression;
+    * NULL for a zero vector, as the oracle's division by zero gives.
+    */
   private[ops] def cosine(dot: Column, na2: Column, nb2: Column): Column =
-    dot.cast("double") / (sqrt(na2.cast("double")) * sqrt(nb2.cast("double")))
+    try_divide(dot.cast("double"), sqrt(na2.cast("double")) * sqrt(nb2.cast("double")))
 
   /** (vec_id, vq, n2) — quantized corpus with precomputed squared norm. */
   private[ops] def corpus(s: SparkSession, dir: String): DataFrame = {
@@ -940,61 +944,97 @@ object Similarity extends QueryModule {
 
   // -------------------------------------------------------- sim_ivf_assign
 
-  /** Per-group exact centroids from a (grp, vq) frame: integer component
-    * sums (order-independent, partial-aggregated map-side), one double
-    * division at the end → (c_label, cv).
+  /** (vec_id, label, vq) — the quantized, labelled corpus every centroid
+    * query starts from.
     */
-  private[graft] def centroidsBy(vecs: DataFrame, grp: String): DataFrame =
-    vecs.select(col(grp).as("g"), posexplode(col("vq")).as(Seq("pos", "v")))
-      .groupBy("g", "pos")
-      .agg(sum("v").as("sv"), count(lit(1)).as("cnt"))
-      .withColumn("c", col("sv").cast("double") / col("cnt"))
-      .groupBy("g")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        x => x.getField("c")).as("cv"))
-      .select(col("g").as("c_label"), col("cv"))
-
-  /** Score every vector of `e` against every (broadcast) centroid.
-    * double-vs-double cosine: both sides fold sequentially over 64 elements
-    * in both engines — deterministic (array_dot reproduces the HOF fold's
-    * sequential IEEE order exactly).
-    */
-  private[graft] def scoreAgainst(e: DataFrame, cent: DataFrame): DataFrame = {
-    val dot = call_function("array_dot", col("vq").cast("array<double>"), col("cv"))
-    val cn2 = call_function("array_dot", col("cv"), col("cv"))
-    e.join(broadcast(cent))
-      .select(e.columns.map(col) :+ col("c_label") :+
-        (dot / (sqrt(inorm2(col("vq")).cast("double")) * sqrt(cn2))).as("cos"): _*)
-  }
-
-  /** (vec_id, label, vq, c_label, cos): every corpus vector scored against
-    * every label-seeded centroid — the pre-argmax frame [[assignments]] and
-    * [[ivfTopK]]'s probe ranking both reduce.
-    */
-  private def scoredCentroids(s: SparkSession, dir: String): DataFrame = {
+  private def labelled(s: SparkSession, dir: String): DataFrame = {
     graft.functions.ArrayDot.register(s)
-    val e = Tables.embeddings(s, dir)
+    Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), quantize(col("embedding")).as("vq"))
-    scoreAgainst(e, centroidsBy(e, "label"))
   }
+
+  /** Exact centroids held on the driver: one `(group, mean vector)` per
+    * non-empty group, sorted by group so the literal plan — and the class
+    * Spark's codegen cache keys on — is the same every run.
+    */
+  private[graft] final case class Centroids(
+      groupType: DataType, byGroup: Seq[(Option[Any], Array[Double])])
+
+  /** The one centroid build, from a (g, vq) frame: ONE aggregate of the
+    * exact integer sufficient statistics `sum(v), count(*)` per (g, pos),
+    * partial-aggregated map-side and collected to the driver — |groups|·
+    * [[Dim]] rows, independent of corpus size. The driver divides
+    * `sv.toDouble / cnt`, the oracle's correctly-rounded `sv::DOUBLE / cnt`.
+    * A vector without components (a null embedding) feeds no group.
+    */
+  private[graft] def centroidsOf(grouped: DataFrame): Centroids =
+    Centroids(grouped.schema("g").dataType,
+      grouped.select(col("g"), posexplode(col("vq")).as(Seq("pos", "v")))
+        .groupBy("g", "pos")
+        .agg(sum("v").as("sv"), count(lit(1)).as("cnt"))
+        .collect().toSeq
+        .groupBy(r => Option(r.get(0)))
+        .map { case (g, rs) =>
+          g -> rs.sortBy(_.getInt(1)).map(r => r.getLong(2).toDouble / r.getLong(3)).toArray }
+        .toSeq.sortBy(_._1.map(_.toString)))
+
+  /** The label-seeded centroids of a (…, label, vq) frame. */
+  private def labelCentroids(e: DataFrame): Centroids =
+    centroidsOf(e.select(col("label").as("g"), col("vq")))
+
+  /** One `struct(cos, neg, label)` per literal centroid, scored against the
+    * row's `vq`. Struct order is the oracle's `cos DESC, c_label ASC`
+    * ranking: max cosine, ties to the smaller label. A zero vector scores
+    * NULL, as the oracle's division by zero does; NULL ranks below every
+    * cosine in both engines, so such a vector goes to the smallest label.
+    */
+  private def centroidScores(cents: Centroids): Seq[Column] =
+    cents.byGroup.map { case (g, cv) =>
+      val c = typedLit(cv)
+      val label = lit(g.orNull).cast(cents.groupType)
+      val dot = call_function("array_dot", col("vq").cast("array<double>"), c)
+      val den = sqrt(inorm2(col("vq")).cast("double")) * sqrt(call_function("array_dot", c, c))
+      struct(try_divide(dot, den).as("cos"), (-label).as("neg"), label.as("label"))
+    }
+
+  /** The type of a [[centroidScores]] struct: with no centroid (no vector
+    * has a component) the rankings below are typed nulls, and callers
+    * keep no rows.
+    */
+  private def scoreType(cents: Centroids): StructType = StructType(Seq(
+    StructField("cos", DoubleType), StructField("neg", cents.groupType),
+    StructField("label", cents.groupType)))
+
+  /** The nearest centroid as `struct(cos, neg, label)` — a row-wise
+    * `greatest` over [[centroidScores]] (it needs ≥ 2 arguments; one
+    * centroid stands alone).
+    */
+  private[graft] def nearest(cents: Centroids): Column = centroidScores(cents) match {
+    case Seq() => lit(null).cast(scoreType(cents))
+    case Seq(c) => c
+    case cs => greatest(cs: _*)
+  }
+
+  /** The `k` nearest centroids, best first, as an array of the
+    * [[centroidScores]] structs (shorter when fewer centroids exist).
+    */
+  private[graft] def nearestK(cents: Centroids, k: Int): Column =
+    if (cents.byGroup.isEmpty) lit(null).cast(ArrayType(scoreType(cents)))
+    else slice(sort_array(array(centroidScores(cents): _*), asc = false), 1, k)
 
   /** (vec_id, label, vq, assigned, cos) — nearest-centroid assignment, the
-    * shared core of [[ivfAssign]] and [[kmeansStep]]: label-seeded
-    * centroids broadcast, max-cosine argmax via a max_by hash aggregate.
+    * shared core of [[ivfAssign]], [[kmeansStep]] and the clustering audits:
+    * the label-seeded centroids are built on the driver and every vector is
+    * assigned ROW-WISE by [[nearest]] — no join, no broadcast, no argmax
+    * shuffle.
     */
   private def assignments(s: SparkSession, dir: String): DataFrame = {
-    // argmax via max_by under a hash aggregate (partial-agg'd map-side, no
-    // Exchange+sort of the 10×corpus scored rows, unlike a row_number
-    // window). Ordering (cos desc, c_label asc) becomes the max of
-    // struct(cos, -c_label) — labels are int32.
-    scoredCentroids(s, dir)
-      .groupBy("vec_id", "label")
-      .agg(max_by(
-        struct(col("c_label"), col("cos")),
-        struct(col("cos"), (-col("c_label")).as("neg"))).as("best"),
-        first(col("vq")).as("vq"))
+    val e = labelled(s, dir)
+    val cents = labelCentroids(e)
+    e.where(lit(cents.byGroup.nonEmpty))
+      .select(col("vec_id"), col("label"), col("vq"), nearest(cents).as("best"))
       .select(col("vec_id"), col("label"), col("vq"),
-        col("best.c_label").as("assigned"), col("best.cos").as("cos"))
+        col("best.label").as("assigned"), col("best.cos").as("cos"))
   }
 
   /** IVF coarse quantizer: every vector assigned to its max-cosine
@@ -1102,11 +1142,12 @@ object Similarity extends QueryModule {
     * double summation), so the strict `<` verdict can't flip across
     * engines even on a boundary tie.
     *
-    * Scale shape: the assignment frame is persisted once and released
-    * after the plan materializes (it feeds both the cut selection and the
-    * verdict join); the cuts frame is |centroids| rows, broadcast onto
-    * the verdicts. Quantiles.exact adds two corpus-scale exchanges with
-    * every window cell bounded at ~n/128 rows — spill-safe at any volume.
+    * Scale shape: the assignment is row-wise against driver-held
+    * centroids; its frame is persisted once and released after the plan
+    * materializes (it feeds both the cut selection and the verdict join);
+    * the cuts frame is |centroids| rows, broadcast onto the verdicts.
+    * Quantiles.exact adds two corpus-scale exchanges with every window
+    * cell bounded at ~n/128 rows — spill-safe at any volume.
     */
   def outlierPrune(s: SparkSession, dir: String): DataFrame = {
     val a = assignments(s, dir)
@@ -1114,7 +1155,10 @@ object Similarity extends QueryModule {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cuts = Quantiles.exact(a, Seq("assigned"), "cos",
       Seq("c_lo" -> OutlierP))
-    val out = a.join(broadcast(cuts), "assigned")
+    // a cluster whose cosines are all NULL (zero vectors only) has no cut
+    // row but keeps its own, as the oracle's quantile_cont gives; the
+    // oracle's equi-join drops a NULL cluster
+    val out = a.where(col("assigned").isNotNull).join(broadcast(cuts), Seq("assigned"), "left")
       .select(col("vec_id"), col("label"), col("assigned"),
         round(col("cos"), 6).as("cos_sim"),
         round(col("c_lo"), 6).as("cut_lo"),
@@ -1132,10 +1176,11 @@ object Similarity extends QueryModule {
     * derivable from these rows; emitting per-cluster keeps the output a
     * quality dashboard, not one number.
     *
-    * Scale shape: two hash aggregates — (assigned, label) counts with
-    * map-side partials (bounded by |centroids|·|labels| groups), then the
-    * per-centroid majority via max_by over those tiny group rows. Nothing
-    * after the first aggregate scales with the corpus.
+    * Scale shape: the row-wise nearest-centroid assignment, then two hash
+    * aggregates — (assigned, label) counts with map-side partials (bounded
+    * by |centroids|·|labels| groups), then the per-centroid majority via
+    * max_by over those tiny group rows. Nothing after the first aggregate
+    * scales with the corpus.
     */
   def clusterPurity(s: SparkSession, dir: String): DataFrame =
     assignments(s, dir)
@@ -1161,8 +1206,8 @@ object Similarity extends QueryModule {
     * to fix. [[clusterPurity]] grades label agreement, [[silhouette]]
     * grades geometric fit; this grades the SERVING cost profile.
     *
-    * Scale shape: the shared nearest-centroid assignment then ONE hash
-    * aggregate onto |centroids| rows; share and imbalance are windows
+    * Scale shape: the shared row-wise nearest-centroid assignment then ONE
+    * hash aggregate onto |centroids| rows; share and imbalance are windows
     * over that bounded frame. Exact integers until one double division.
     */
   def ivfBalance(s: SparkSession, dir: String): DataFrame = {
@@ -1200,20 +1245,20 @@ object Similarity extends QueryModule {
     * value-buffering `percentile` — silhouettes are near-unique doubles);
     * min and the s < 0 count are order-independent.
     *
-    * Scale shape: scoring is the shared broadcast-centroid frame
-    * (|corpus|·|centroids| rows, no shuffle); best + runner-up collapse in
-    * ONE map-side-partial hash aggregate holding ≤ |centroids| structs per
-    * vector; the rollup is |centroids| rows + the bounded-state median.
+    * Scale shape: best + runner-up are ONE row-wise column — the top 2 of
+    * [[nearestK]] over the driver-held centroids, no join and no shuffle;
+    * the rollup is |centroids| rows + the bounded-state median.
     */
   def silhouette(s: SparkSession, dir: String): DataFrame = {
-    val top2 = scoredCentroids(s, dir)
-      .groupBy("vec_id")
-      .agg(slice(sort_array(collect_list(
-        struct((-col("cos")).as("nc"), col("c_label")))), 1, 2).as("t2"))
+    val e = labelled(s, dir)
+    val cents = labelCentroids(e)
+    // get() reads a missing runner-up (a one-centroid corpus) as NULL
+    val top2 = e.where(lit(cents.byGroup.nonEmpty))
+      .select(col("vec_id"), nearestK(cents, 2).as("t2"))
       .select(col("vec_id"),
-        col("t2")(0).getField("c_label").as("assigned"),
-        (-col("t2")(0).getField("nc")).as("cos1"),
-        (-col("t2")(1).getField("nc")).as("cos2"))
+        get(col("t2"), lit(0)).getField("label").as("assigned"),
+        get(col("t2"), lit(0)).getField("cos").as("cos1"),
+        get(col("t2"), lit(1)).getField("cos").as("cos2"))
     val sil = top2.select(col("vec_id"), col("assigned"),
       ((lit(1.0) - col("cos2")) - (lit(1.0) - col("cos1"))).as("num"),
       greatest(lit(1.0) - col("cos1"), lit(1.0) - col("cos2")).as("den"))
@@ -1223,11 +1268,14 @@ object Similarity extends QueryModule {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val med = Quantiles.exact(sil, Seq("assigned"), "s",
       Seq("median_sil" -> 0.5))
-    val out = sil.groupBy("assigned")
+    // a cluster whose silhouettes are all NULL (one centroid: no runner-up)
+    // has no median row but keeps its own, as the oracle's quantile_cont
+    // gives; the oracle's equi-join drops a NULL cluster
+    val out = sil.where(col("assigned").isNotNull).groupBy("assigned")
       .agg(count(lit(1)).as("n_vecs"),
         sum(when(col("s") < 0, 1L).otherwise(0L)).as("n_negative"),
         min("s").as("mn"))
-      .join(broadcast(med), "assigned")
+      .join(broadcast(med), Seq("assigned"), "left")
       .select(col("assigned"), col("n_vecs"), col("n_negative"),
         round(col("median_sil"), 6).as("median_sil"),
         round(col("mn"), 6).as("min_sil"))
@@ -1241,8 +1289,8 @@ object Similarity extends QueryModule {
   private[graft] val ClusterCap = 48L // membership that triggers a sub-split
 
   /** SemDeDup-style semantic deduplication: candidate pairs are members of
-    * the same IVF coarse cluster (nearest-centroid assignment — the
-    * clustering half of [[ivfAssign]]), verified by exact fixed-point
+    * the same IVF coarse cluster (the row-wise nearest-centroid assignment
+    * of [[ivfAssign]]), verified by exact fixed-point
     * cosine; within a confirmed pair the member FARTHER from its centroid
     * is kept (the diversity-preserving keeper rule) and the closer one
     * dropped. Emits (cluster, keep_id, drop_id, cos_sim).
@@ -1302,30 +1350,26 @@ object Similarity extends QueryModule {
     * lists this scans ~NProbe/|centroids| of the corpus per query — the
     * recall-vs-work dial of a production ANN serving path.
     *
-    * Scale shape: centroids broadcast (|labels| rows); the corpus is filed
-    * into lists by the same map-side max_by argmax as [[ivfAssign]] (one
-    * shuffle of (vec, list) rows); the probe table is |Q|·NProbe rows —
-    * broadcast onto the lists as an equi-join on the list id (each corpus
-    * vector lives in exactly ONE list, so candidates need no dedup); the
-    * re-rank is the salted two-phase top-k. No stage ever holds more than a
-    * list's slice of the corpus.
+    * Scale shape: the centroids are built on the driver; the corpus is
+    * filed into lists row-wise by [[nearest]], as in [[ivfAssign]], and
+    * each query's probes are the top [[NProbe]] of [[nearestK]]. The
+    * probe table is |Q|·NProbe rows, broadcast onto the lists as an
+    * equi-join on the list id (each corpus vector lives in exactly ONE
+    * list, so candidates need no dedup); the re-rank is the salted
+    * two-phase top-k. No stage ever holds more than a list's slice of the
+    * corpus.
     */
   def ivfTopK(s: SparkSession, dir: String): DataFrame = {
-    val scored = scoredCentroids(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // inverted lists: every corpus vector under its argmax centroid
-    val lists = scored
-      .groupBy("vec_id")
-      .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("neg"))).as("cl"),
-        first(col("vq")).as("vq"))
+    val e = labelled(s, dir)
+    val cents = labelCentroids(e)
+    // inverted lists: every corpus vector under its nearest centroid
+    val lists = e.select(col("vec_id"), col("vq"), nearest(cents).getField("label").as("cl"))
       .withColumn("n2", inorm2(col("vq")))
-    // probe set: the demo queries' NProbe best centroids (tiny: |Q|×|labels|
-    // rows reach the window, |Q|·NProbe survive)
-    val probe = scored.filter(col("vec_id") < NumQueries)
-      .withColumn("prnk", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("cos").desc, col("c_label").asc)))
-      .filter(col("prnk") <= NProbe)
-      .select(col("vec_id").as("q_id"), col("c_label").as("cl"), col("vq").as("qv"))
+    // probe set: the demo queries' NProbe nearest centroids
+    val probe = e.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("q_id"), col("vq").as("qv"),
+        explode(nearestK(cents, NProbe)).as("p"))
+      .select(col("q_id"), col("p.label").as("cl"), col("qv"))
       .withColumn("qn2", inorm2(col("qv")))
     val cand = lists.join(broadcast(probe), "cl")
       .filter(col("vec_id") =!= col("q_id"))
@@ -1336,7 +1380,6 @@ object Similarity extends QueryModule {
       .select(col("q_id"), col("vec_id"), col("rnk"),
         round(col("cos"), 6).as("cos_sim"))
       .orderBy("q_id", "rnk")
-      .transform(Dedup.materializeThenRelease(_, scored))
   }
 
   // --------------------------------------------------------- sim_ivfpq_topk
@@ -1352,20 +1395,20 @@ object Similarity extends QueryModule {
     * billion-vector indexes.
     *
     * Scale shape: ONE persisted quantized-embeddings scan feeds the
-    * sub-codebook, the code table, the LUT, and the coarse scoring; the
-    * probe table (|Q|·NProbe rows) and LUT (|Q|·M·K rows) broadcast; list
-    * membership joins on the list id and ADC folds under a (q, vec) hash
-    * aggregate with map-side partials. Each corpus vector lives in exactly
-    * one list, so candidates need no dedup.
+    * driver-side centroid build, the code table, the LUT, the lists and
+    * the probes. The sub-codebook is a local frame sliced from the
+    * centroids; lists and probes are row-wise [[nearest]] / [[nearestK]]
+    * columns. The probe table (|Q|·NProbe rows) and LUT (|Q|·M·K rows)
+    * broadcast; list membership joins on the list id and ADC folds under a
+    * (q, vec) hash aggregate with map-side partials. Each corpus vector
+    * lives in exactly one list, so candidates need no dedup.
     */
   def ivfPqTopK(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    graft.functions.ArrayDot.register(s)
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("vq"))
+    val e = labelled(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val csub = pqCsubOf(e)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cents = labelCentroids(e)
+    val csub = pqCsubOf(s, cents)
     val codes = pqCodes(pqScoredAgainst(e.select("vec_id", "vq"), csub))
       .select("vec_id", "m", "code")
     val lut = pqScoredAgainst(
@@ -1373,17 +1416,10 @@ object Similarity extends QueryModule {
       .select(col("vec_id").as("q2"), col("m").as("lm"), col("c_label"),
         round(col("dist") / lit(Scale.toDouble * Scale), 6)
           .cast(DecimalType(18, 6)).as("d6"))
-    val coarse = scoreAgainst(e.select(col("vec_id"), col("vq")),
-        centroidsBy(e.select(col("label"), col("vq")), "label"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lists = coarse.groupBy("vec_id")
-      .agg(max_by(col("c_label"),
-        struct(col("cos"), (-col("c_label")).as("neg"))).as("cl"))
-    val probe = coarse.filter(col("vec_id") < NumQueries)
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("cos").desc, col("c_label").asc)))
-      .filter(col("crnk") <= NProbe)
-      .select(col("vec_id").as("q_id"), col("c_label").as("cl"))
+    val lists = e.select(col("vec_id"), nearest(cents).getField("label").as("cl"))
+    val probe = e.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("q_id"), explode(nearestK(cents, NProbe)).as("p"))
+      .select(col("q_id"), col("p.label").as("cl"))
     val cand = lists.join(broadcast(probe), "cl")
       .filter(col("vec_id") =!= col("q_id"))
       .select("q_id", "vec_id")
@@ -1397,7 +1433,7 @@ object Similarity extends QueryModule {
       .select(col("q_id"), col("vec_id"), col("rnk"),
         round(col("adc").cast("double"), 6).as("adc_dist"))
       .orderBy("q_id", "rnk")
-      .transform(Dedup.materializeThenRelease(_, e, csub, coarse))
+      .transform(Dedup.materializeThenRelease(_, e))
   }
 
   // -------------------------------------------------------- sim_kmeans_step
@@ -1409,7 +1445,8 @@ object Similarity extends QueryModule {
     * `sum_v / n_members`. Keeping the output in integer sums (not double
     * means) keeps the whole step order-independent and bit-reproducible.
     *
-    * Scale shape: posexplode fans each vector into [[Dim]] rows whose
+    * Scale shape: the assignment is row-wise against driver-held
+    * centroids; posexplode then fans each vector into [[Dim]] rows whose
     * (cluster, pos) groupBy is partial-aggregated map-side — the shuffle
     * carries at most |clusters|·Dim·partitions rows, independent of corpus
     * size. This is exactly how a distributed k-means trainer folds a 100 TB
@@ -1433,16 +1470,12 @@ object Similarity extends QueryModule {
     *
     * Scale shape: the loop state lives on the DRIVER, the way a distributed
     * Lloyd trainer runs. The quantized corpus `(vec_id, label, vq)` is the
-    * loop-invariant frame, persisted once. Each refit is ONE aggregate — the
-    * exact integer sufficient statistics `sum(v), count(*)` per
-    * (group, pos), partial-aggregated map-side — collected to the driver:
-    * |labels|·[[Dim]] rows per round, independent of corpus size. The
-    * driver divides `sv.toDouble / cnt` (the oracle's correctly-rounded
-    * `sv::DOUBLE / cnt`) and the centroids re-enter the plan as literals,
-    * so the next assignment is a ROW-WISE column — a `greatest` over one
-    * `struct(cos, -label, label)` per centroid — with no join, no
-    * broadcast and no argmax shuffle; the struct order is the oracle's
-    * `cos DESC, c_label ASC` ranking. The assignment is projected
+    * loop-invariant frame, persisted once. Each refit is the shared
+    * centroid build [[centroidsOf]] — one aggregate collected to the
+    * driver, |labels|·[[Dim]] rows per round, independent of corpus size
+    * — and the centroids re-enter the plan as literals, so the next
+    * assignment is the ROW-WISE [[nearest]] column with no join, no
+    * broadcast and no argmax shuffle. The assignment is projected
     * in its own select BEFORE the posexplode that feeds the next refit:
     * sharing the generator's select lets the optimizer evaluate the
     * K-way `greatest` after the explode, once per component ([[Dim]]×). K
@@ -1454,55 +1487,21 @@ object Similarity extends QueryModule {
     * and yields zero rows, as the oracle does.
     */
   def kmeansTrain(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayDot.register(s)
-    def frame = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("vq"))
-    val e = frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val labelType = e.schema("label").dataType
-    // (group, cv) per non-empty group, sorted so the literal plan — and
-    // the class Spark's codegen cache keys on — is the same every run
-    def refit(grouped: DataFrame): Seq[(Option[Any], Array[Double])] =
-      grouped.select(col("g"), posexplode(col("vq")).as(Seq("pos", "v")))
-        .groupBy("g", "pos")
-        .agg(sum("v").as("sv"), count(lit(1)).as("cnt"))
-        .collect().toSeq
-        .groupBy(r => Option(r.get(0)))
-        .map { case (g, rs) =>
-          g -> rs.sortBy(_.getInt(1)).map(r => r.getLong(2).toDouble / r.getLong(3)).toArray }
-        .toSeq.sortBy(_._1.map(_.toString))
-    // the nearest centroid as struct(cos, neg, label): max cosine, ties to
-    // the smaller label; greatest() needs ≥ 2 arguments
-    def nearest(cents: Seq[(Option[Any], Array[Double])]): Column = {
-      val cands = cents.map { case (g, cv) =>
-        val c = typedLit(cv)
-        val label = lit(g.orNull).cast(labelType)
-        val dot = call_function("array_dot", col("vq").cast("array<double>"), c)
-        val cn2 = call_function("array_dot", c, c)
-        struct(
-          (dot / (sqrt(inorm2(col("vq")).cast("double")) * sqrt(cn2))).as("cos"),
-          (-label).as("neg"), label.as("label"))
-      }
-      if (cands.size == 1) cands.head else greatest(cands: _*)
-    }
-    var cents = refit(e.select(col("label").as("g"), col("vq")))
+    val e = labelled(s, dir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var cents = labelCentroids(e)
     // TrainIters assignment rounds ⇒ TrainIters − 1 refits BETWEEN them.
     // A vector without components feeds no refit, so its key may be null:
     // that keeps the key as nullable as the label column, and every refit
     // shares one set of generated exchange/aggregate/collect classes.
-    if (cents.nonEmpty)
-      for (_ <- 2 to TrainIters)
-        cents = refit(e.select(
-          when(col("vq").isNotNull, nearest(cents).getField("label")).as("g"), col("vq")))
+    for (_ <- 2 to TrainIters)
+      cents = centroidsOf(e.select(
+        when(col("vq").isNotNull, nearest(cents).getField("label")).as("g"), col("vq")))
     e.unpersist(false)
-    val out =
-      if (cents.isEmpty)
-        frame.select(col("vec_id"), lit(null).cast(labelType).as("cluster"),
-          lit(null).cast("double").as("cos_sim")).where(lit(false))
-      else
-        frame.select(col("vec_id"), nearest(cents).as("best"))
-          .select(col("vec_id"), col("best.label").as("cluster"),
-            round(col("best.cos"), 6).as("cos_sim"))
-    out.orderBy("vec_id")
+    labelled(s, dir).where(lit(cents.byGroup.nonEmpty))
+      .select(col("vec_id"), nearest(cents).as("best"))
+      .select(col("vec_id"), col("best.label").as("cluster"),
+        round(col("best.cos"), 6).as("cos_sim"))
+      .orderBy("vec_id")
   }
 
   // -------------------------------------------------------- sim_pq_encode
@@ -1514,11 +1513,12 @@ object Similarity extends QueryModule {
     * index: each vector splits into [[PqM]] contiguous subvectors, and each
     * subvector is coded as the id of its nearest sub-codeword (min L2, ties
     * to the lower label). The sub-codebooks here are the exact per-label
-    * centroids of [[assignments]] restricted to each subspace — the
+    * centroids of [[centroidsOf]] restricted to each subspace — the
     * deterministic stand-in for a trained codebook (a Lloyd-trained one
     * plugs into the same plan via [[kmeansStep]]).
     *
-    * Scale shape: the 80 sub-codewords broadcast; the corpus expands ×M
+    * Scale shape: the centroids are one aggregate collected to the driver
+    * and their 80 sub-codewords a broadcast local frame; the corpus expands ×M
     * inside the scan stage (posexplode of slices — no shuffle) and the
     * argmin is a min_by hash aggregate with map-side partials, so the only
     * shuffle carries one (vec, m) row per subvector. Distances stay in the
@@ -1543,34 +1543,33 @@ object Similarity extends QueryModule {
     * every sub-codeword — the pre-argmin frame [[pqEncode]]'s codes and
     * [[pqTopK]]'s lookup tables both reduce.
     */
-  private def pqScored(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayDot.register(s)
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), quantize(col("embedding")).as("vq"))
-    pqScoredAgainst(e, pqCsub(s, dir))
-  }
+  private def pqScored(s: SparkSession, dir: String): DataFrame =
+    pqScoredAgainst(labelled(s, dir), pqCsub(s, dir))
 
   /** The vector split into [[PqM]] contiguous [[PqSubDim]]-wide slices. */
   private def subSlices(arr: Column): Column = array(
     (0 until PqM).map(m => slice(arr, m * PqSubDim + 1, PqSubDim)): _*)
 
   /** The sub-codebook: per-subspace codeword slices + their squared norms
-    * (|clusters|·M rows — tiny, broadcastable, and REUSABLE: [[pqTopK]]
-    * persists it so the centroid aggregation under it runs once, not once
-    * per consumer branch).
+    * (|clusters|·M rows — tiny, broadcastable, and REUSABLE: a local frame,
+    * so every consumer branch reads it without re-running an aggregation).
     */
   private def pqCsub(s: SparkSession, dir: String): DataFrame =
-    pqCsubOf(Tables.embeddings(s, dir)
-      .select(col("label"), quantize(col("embedding")).as("vq")))
+    pqCsubOf(s, labelCentroids(labelled(s, dir)))
 
-  /** Sub-codebook from an explicit (label, vq) frame — lets callers that
-    * already hold a (persisted) quantized-embeddings frame share its scan.
+  /** Sub-codebook sliced from driver-held centroids — a local frame, so
+    * callers that already hold a (persisted) quantized-embeddings frame
+    * build the centroids from it and share its scan.
     */
-  private def pqCsubOf(vecs: DataFrame): DataFrame =
-    centroidsBy(vecs.select(col("label"), col("vq")), "label")
-      .select(col("c_label"),
-        posexplode(subSlices(col("cv"))).as(Seq("m", "cs")))
+  private def pqCsubOf(s: SparkSession, cents: Centroids): DataFrame = {
+    val rows = for ((g, cv) <- cents.byGroup; m <- 0 until PqM)
+      yield Row(g.orNull, m, cv.slice(m * PqSubDim, (m + 1) * PqSubDim).toSeq)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+        StructField("c_label", cents.groupType),
+        StructField("m", IntegerType, nullable = false),
+        StructField("cs", ArrayType(DoubleType, containsNull = false)))))
       .withColumn("cn2", call_function("array_dot", col("cs"), col("cs")))
+  }
 
   /** Scores a (vec_id, vq) frame's subvectors against a sub-codebook. */
   private def pqScoredAgainst(e: DataFrame, csub: DataFrame): DataFrame = {
@@ -1609,18 +1608,17 @@ object Similarity extends QueryModule {
     * output in integer sums keeps it hash-checkable (a mean would hang
     * cross-engine equality on division rounding).
     *
-    * Scale shape: the sub-codebook broadcasts; the corpus expands ×M
+    * Scale shape: the centroids are one aggregate collected to the driver
+    * and the sub-codebook a broadcast local frame; the corpus expands ×M
     * inside the scan stage; the argmin is a min_by hash aggregate whose
     * map-side partial collapses the K scored rows per subvector BEFORE
     * the one (vec, m)-keyed exchange (the subvector rides the partial via
     * `first`, so no join back); the refit fold lands on M·K·[[PqSubDim]]
-    * bounded rows. One corpus pass, no persisted frame.
+    * bounded rows. Two corpus passes (the build and the step), no
+    * persisted frame.
     */
   def pqTrainStep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayDot.register(s)
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), quantize(col("embedding")).as("vq"))
-    val sub = e
+    val sub = labelled(s, dir)
       .select(col("vec_id"), posexplode(subSlices(col("vq"))).as(Seq("m", "sv")))
       .withColumn("svd", col("sv").cast("array<double>"))
       .withColumn("sn2", call_function("array_dot", col("svd"), col("svd")))
@@ -1663,21 +1661,16 @@ object Similarity extends QueryModule {
     * decimals, and summed as an exact DECIMAL — the txt_entropy pre-round
     * trick — making the ADC distance order-independent in both engines.
     */
-  private def adcScores(s: SparkSession, dir: String): (DataFrame, () => Unit) = {
+  private def adcScores(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.types.DecimalType
-    graft.functions.ArrayDot.register(s)
     // ONE embeddings scan: the quantized frame feeds the codebook build,
     // the full-corpus code table, AND the query LUT (previously three
     // separate parquet scans + three quantize passes). The persist is the
     // standard index-build caches-its-input pattern; the LUT branch filters
     // the cached frame instead of re-scanning with pushdown.
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("vq"))
+    val e = labelled(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the centroid aggregation feeds BOTH consumer branches (codes + LUT);
-    // persisting the tiny |clusters|·M sub-codebook keeps it to one run
-    val csub = pqCsubOf(e)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val csub = pqCsubOf(s, labelCentroids(e))
     val codes = pqCodes(pqScoredAgainst(e.select("vec_id", "vq"), csub))
       .select("vec_id", "m", "code")
     val lut = pqScoredAgainst(
@@ -1685,29 +1678,26 @@ object Similarity extends QueryModule {
       .select(col("vec_id").as("q_id"), col("m").as("lm"), col("c_label"),
         round(col("dist") / lit(Scale.toDouble * Scale), 6)
           .cast(DecimalType(18, 6)).as("d6"))
-    // LAZY |Q|·n score frame + a hook for the two internal caches (the
-    // corpus-scale quantized-embeddings frame and the sub-codebook): each
-    // consumer reads the scores once into its own materialized result, so
-    // no intermediate materialization pass is needed — the caches populate
-    // during the consumer's action and drop right after it.
+    // LAZY |Q|·n score frame + the corpus-scale quantized-embeddings cache
+    // under it: each consumer reads the scores once into its own
+    // materialized result, so no intermediate materialization pass is
+    // needed — the consumer releases the cache right after its action.
     val adc = codes.join(broadcast(lut),
         codes("m") === lut("lm") && codes("code") === lut("c_label"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy("q_id", "vec_id")
       .agg(sum(col("d6")).as("adc"))
-    (adc, () => { e.unpersist(false); csub.unpersist(false); () })
+    (adc, e)
   }
 
   def pqTopK(s: SparkSession, dir: String): DataFrame = {
-    val (adc, release) = adcScores(s, dir)
-    val out = Dedup.materializeThenRelease(adc
+    val (adc, e) = adcScores(s, dir)
+    Dedup.materializeThenRelease(adc
       .transform(topKPerGroup(_, Seq("q_id"), "vec_id", TopK,
         col("adc").asc, col("vec_id").asc))
       .select(col("q_id"), col("vec_id"), col("rnk"),
         round(col("adc").cast("double"), 6).as("adc_dist"))
-      .orderBy("q_id", "rnk"))
-    release()
-    out
+      .orderBy("q_id", "rnk"), e)
   }
 
   // --------------------------------------------------------- sim_pq_rerank
@@ -1734,7 +1724,7 @@ object Similarity extends QueryModule {
     * both engines); rounding is display-only.
     */
   def pqRerank(s: SparkSession, dir: String): DataFrame = {
-    val (adc, releaseAdc) = adcScores(s, dir)
+    val (adc, e) = adcScores(s, dir)
     val short = adc
       .transform(topKPerGroup(_, Seq("q_id"), "vec_id", RerankK,
         col("adc").asc, col("vec_id").asc))
@@ -1745,7 +1735,7 @@ object Similarity extends QueryModule {
     // exact |q−c|² via the dot identity, all-integer → exact in double
     val l2 = (col("n2") - lit(2.0) * idot(col("vq"), col("qv")) + col("qn2"))
       .cast("double") / lit(Scale.toDouble * Scale)
-    val out = Dedup.materializeThenRelease(
+    Dedup.materializeThenRelease(
       short.join(c, "vec_id")
         .join(broadcast(q), col("q_id") === col("qq_id"))
         .select(col("q_id"), col("vec_id"), l2.as("l2"))
@@ -1753,9 +1743,7 @@ object Similarity extends QueryModule {
           col("l2").asc, col("vec_id").asc))
         .select(col("q_id"), col("vec_id"), col("rnk"),
           round(col("l2"), 6).as("l2_dist"))
-        .orderBy("q_id", "rnk"))
-    releaseAdc()
-    out
+        .orderBy("q_id", "rnk"), e)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

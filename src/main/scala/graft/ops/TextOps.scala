@@ -2182,7 +2182,7 @@ object TextOps extends QueryModule {
          |), t$r AS (
          |  SELECT lhs, rhs, sum(f)::BIGINT AS pair_count
          |  FROM p$r GROUP BY 1, 2 ORDER BY 3 DESC, 1, 2 LIMIT 1
-         |), v$r AS (
+         |), v$r AS MATERIALIZED (
          |  SELECT ${w}CASE WHEN t.lhs IS NULL THEN ws ELSE
          |    replace(ws, '{' || t.lhs || '}{' || t.rhs || '}',
          |            '{' || t.lhs || t.rhs || '}') END AS ws, f
@@ -2342,7 +2342,7 @@ object TextOps extends QueryModule {
          |    CAST(sum(CASE WHEN ('0x' || substr(md5(t), 9, 1))::BIGINT % 2 = 0
          |             THEN 1 ELSE -1 END) AS BIGINT) AS x
          |  FROM tok GROUP BY 1, 2
-         |), c AS (
+         |), c AS MATERIALIZED (
          |  SELECT * FROM comps0 WHERE x <> 0
          |), lbl AS (
          |  SELECT doc_id,
@@ -2353,17 +2353,17 @@ object TextOps extends QueryModule {
          |), s0 AS (SELECT 0::BIGINT AS bias)""".stripMargin
     val rounds = (1 to PerceptronRounds).map { r =>
       val (pw, ps, m, st, wn) = (s"w${r - 1}", s"s${r - 1}", s"m$r", s"s$r", s"w$r")
-      s""", $m AS (
+      s""", $m AS MATERIALIZED (
          |  SELECT l.doc_id, l.y FROM lbl l
          |  LEFT JOIN (SELECT c.doc_id, sum($pw.wv * c.x) AS dot
          |             FROM c JOIN $pw USING (dim) GROUP BY c.doc_id) s
          |    ON s.doc_id = l.doc_id, $ps
          |  WHERE l.y * (coalesce(s.dot, 0) + $ps.bias) <= 0
-         |), $st AS (
+         |), $st AS MATERIALIZED (
          |  SELECT ((SELECT bias FROM $ps) + coalesce(sum(y), 0))::BIGINT AS bias,
          |    count(*)::BIGINT AS nm
          |  FROM $m
-         |), $wn AS (
+         |), $wn AS MATERIALIZED (
          |  SELECT $pw.dim, ($pw.wv + coalesce(d.dw, 0))::BIGINT AS wv
          |  FROM $pw LEFT JOIN (SELECT c.dim, sum(m.y * c.x) AS dw
          |                      FROM $m m JOIN c USING (doc_id) GROUP BY c.dim) d

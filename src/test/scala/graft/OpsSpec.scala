@@ -5,6 +5,60 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.MapReduce
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
 
+/** The relational nearest-centroid formulation the driver-held
+  * [[Similarity.centroidsOf]] / [[Similarity.nearest]] pair replaced, kept
+  * as the bit-identity reference: per-label centroids as a two-shuffle
+  * subplan, every vector scored against them by a broadcast cross join,
+  * and the argmax a max_by aggregate per vector. Its cosine is the
+  * driver-held one's: NULL for a zero vector, as in the oracle.
+  */
+object CentroidReference {
+  private def spark = TestSpark.spark
+
+  /** (vec_id, label, vq) of the embeddings in `d`. */
+  def labelled(d: String): org.apache.spark.sql.DataFrame = {
+    graft.functions.ArrayDot.register(spark)
+    Tables.embeddings(spark, d)
+      .select(col("vec_id"), col("label"), Similarity.quantize(col("embedding")).as("vq"))
+  }
+
+  /** Per-group exact centroids → (c_label, cv). */
+  def centroidsBy(vecs: org.apache.spark.sql.DataFrame, grp: String): org.apache.spark.sql.DataFrame =
+    vecs.select(col(grp).as("g"), posexplode(col("vq")).as(Seq("pos", "v")))
+      .groupBy("g", "pos")
+      .agg(sum("v").as("sv"), count(lit(1)).as("cnt"))
+      .withColumn("c", col("sv").cast("double") / col("cnt"))
+      .groupBy("g")
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
+        x => x.getField("c")).as("cv"))
+      .select(col("g").as("c_label"), col("cv"))
+
+  /** Every vector of `e` scored against every (broadcast) centroid. */
+  def scoreAgainst(e: org.apache.spark.sql.DataFrame,
+      cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val dot = call_function("array_dot", col("vq").cast("array<double>"), col("cv"))
+    val den = sqrt(call_function("array_dot", col("vq"), col("vq")).cast("double")) *
+      sqrt(call_function("array_dot", col("cv"), col("cv")))
+    e.join(broadcast(cent))
+      .select(e.columns.map(col) :+ col("c_label") :+
+        try_divide(dot, den).as("cos"): _*)
+  }
+
+  /** (vec_id, label, vq, assigned, cos): the max-cosine centroid per
+    * vector, ties to the smaller label.
+    */
+  def assignUnder(e: org.apache.spark.sql.DataFrame,
+      cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    scoreAgainst(e, cent)
+      .groupBy("vec_id", "label")
+      .agg(max_by(
+        struct(col("c_label"), col("cos")),
+        struct(col("cos"), (-col("c_label")).as("neg"))).as("best"),
+        first(col("vq")).as("vq"))
+      .select(col("vec_id"), col("label"), col("vq"),
+        col("best.c_label").as("assigned"), col("best.cos").as("cos"))
+}
+
 /** Operator-level invariants on the sf0.001 fixtures — cheap structural
   * checks that hold at any scale (the value-level gate is the DuckDB oracle
   * in tools/check.py; these catch semantic regressions earlier and cover
@@ -101,29 +155,50 @@ class OpsSpec extends AnyFunSuite {
   }
 
   /** The relational two-round Lloyd formulation kmeansTrain replaced:
-    * centroids as a two-shuffle subplan ([[Similarity.centroidsBy]]),
-    * broadcast-scored ([[Similarity.scoreAgainst]]), the argmax a max_by
-    * aggregate per vector. The reference the driver-side loop must match
-    * bit for bit.
+    * centroids as a two-shuffle subplan ([[CentroidReference.centroidsBy]]),
+    * broadcast-scored and reduced by a max_by argmax per vector
+    * ([[CentroidReference.assignUnder]]). The reference the driver-side
+    * loop must match bit for bit.
     */
   private def kmeansTrainRelational(d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.ArrayDot.register(spark)
-    val emb = Tables.embeddings(spark, d)
-    val e = emb.select(col("vec_id"), Similarity.quantize(col("embedding")).as("vq"))
-    def assignUnder(cent: org.apache.spark.sql.DataFrame) =
-      Similarity.scoreAgainst(e, cent)
-        .groupBy("vec_id")
-        .agg(max_by(
-          struct(col("c_label"), col("cos")),
-          struct(col("cos"), (-col("c_label")).as("neg"))).as("best"),
-          first(col("vq")).as("vq"))
-        .select(col("vec_id"), col("vq"),
-          col("best.c_label").as("assigned"), col("best.cos").as("cos"))
-    val asg1 = assignUnder(Similarity.centroidsBy(
-      emb.select(col("label"), Similarity.quantize(col("embedding")).as("vq")), "label"))
-    assignUnder(Similarity.centroidsBy(asg1.select(col("assigned"), col("vq")), "assigned"))
+    val e = CentroidReference.labelled(d)
+    val asg1 = CentroidReference.assignUnder(e, CentroidReference.centroidsBy(e, "label"))
+    CentroidReference.assignUnder(e,
+        CentroidReference.centroidsBy(asg1.select(col("assigned"), col("vq")), "assigned"))
       .select(col("vec_id"), col("assigned").as("cluster"), round(col("cos"), 6).as("cos_sim"))
       .orderBy("vec_id")
+  }
+
+  /** sim_ivf_assign restated over the relational centroid path. */
+  private def ivfAssignRelational(d: String): org.apache.spark.sql.DataFrame = {
+    val e = CentroidReference.labelled(d)
+    CentroidReference.assignUnder(e, CentroidReference.centroidsBy(e, "label"))
+      .select(col("vec_id"), col("label"), col("assigned"),
+        (col("label") === col("assigned")).as("hit"), round(col("cos"), 6).as("cos_sim"))
+      .orderBy("vec_id")
+  }
+
+  /** (vec_id, rnk, label, cos) of the [[CentroidTopK]] nearest label
+    * centroids, from the driver-held ranking and from the relational one
+    * (the oracle's `cos DESC, c_label ASC`: a NULL label loses ties).
+    */
+  private val CentroidTopK = 3
+  private def topKDriver(d: String): org.apache.spark.sql.DataFrame = {
+    val e = CentroidReference.labelled(d)
+    val cents = Similarity.centroidsOf(e.select(col("label").as("g"), col("vq")))
+    e.select(col("vec_id"), posexplode(Similarity.nearestK(cents, CentroidTopK)).as(Seq("p", "c")))
+      .select(col("vec_id"), (col("p") + 1).as("rnk"), col("c.label").as("label"),
+        col("c.cos").as("cos"))
+      .orderBy("vec_id", "rnk")
+  }
+  private def topKRelational(d: String): org.apache.spark.sql.DataFrame = {
+    val e = CentroidReference.labelled(d)
+    CentroidReference.scoreAgainst(e, CentroidReference.centroidsBy(e, "label"))
+      .withColumn("rnk", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy("vec_id").orderBy(col("cos").desc, col("c_label").asc_nulls_last)))
+      .filter(col("rnk") <= CentroidTopK)
+      .select(col("vec_id"), col("rnk"), col("c_label").as("label"), col("cos"))
+      .orderBy("vec_id", "rnk")
   }
 
   /** A copy of the sf0.001 fixture in a fresh temp dir whose `embeddings`
@@ -175,6 +250,39 @@ class OpsSpec extends AnyFunSuite {
       val got = exactRows(Similarity.kmeansTrain(spark, d))
       assert(got === exactRows(kmeansTrainRelational(d)), tag)
       assert(got.length === Tables.embeddings(spark, d).count(), tag)
+      // the shared argmax and top-k against the relational ranking
+      assert(exactRows(Similarity.ivfAssign(spark, d)) === exactRows(ivfAssignRelational(d)), tag)
+      assert(exactRows(topKDriver(d)) === exactRows(topKRelational(d)), tag)
+    }
+    // a zero vector: the oracle's cosine divides by zero to NULL, which
+    // every cosine outranks, so the vector goes to the smallest label (0)
+    val zero = typedLit(Seq.fill(Similarity.Dim)(0.0f))
+    withEmbeddings("zero-vector")(_.withColumn("embedding",
+        when(col("vec_id") === 7, zero).otherwise(col("embedding")))) { d =>
+      val asg = exactRows(Similarity.ivfAssign(spark, d))
+      assert(asg.find(_.head == 7L).get === Seq(7L, 1, 0, false, null))
+      assert(exactRows(Similarity.kmeansTrain(spark, d)).find(_.head == 7L).get ===
+        Seq(7L, 0, null))
+      assert(asg === exactRows(ivfAssignRelational(d)))
+      assert(exactRows(Similarity.kmeansTrain(spark, d)) === exactRows(kmeansTrainRelational(d)))
+      assert(exactRows(topKDriver(d)) === exactRows(topKRelational(d)))
+    }
+    // every label-0 vector zero: centroid 0 is the zero vector, the zero
+    // vectors form cluster 0 with only NULL cosines, and the oracle keeps
+    // their rows with a NULL cut and verdict
+    withEmbeddings("zero-cluster")(_.withColumn("embedding",
+        when(col("label") === 0, zero).otherwise(col("embedding")))) { d =>
+      val rows = Similarity.outlierPrune(spark, d).collect()
+      assert(rows.length === Tables.embeddings(spark, d).count())
+      val zeros = rows.filter(_.getAs[Int]("label") == 0)
+      assert(zeros.nonEmpty && zeros.forall(r => r.getAs[Int]("assigned") == 0 &&
+        r.isNullAt(r.fieldIndex("cut_lo")) && r.isNullAt(r.fieldIndex("outlier"))))
+    }
+    // one label: no runner-up centroid, so every silhouette is NULL, as the
+    // oracle gives (3, 500, 0, NULL, NULL)
+    withEmbeddings("one-label")(_.withColumn("label", lit(3).cast(labelType))) { d =>
+      assert(Similarity.silhouette(spark, d).collect().toSeq.map(_.toSeq) ===
+        Seq(Seq(3, 500L, 0L, null, null)))
     }
   }
 

@@ -24,28 +24,25 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   /** Queries whose plans intentionally contain a BroadcastNestedLoopJoin
     * against a side that is SMALL BY CONSTRUCTION (not merely small at this
-    * SF): the ≤ 10-row centroid/codebook tables (sim_*), and the 1-row
-    * threshold scalar (ev_range_join). sim_kmeans_train, the classifier
-    * pair and the unigram pair are NOT here: their loop state (centroids,
-    * weights and bias, piece probabilities) enters the plan as driver-side
-    * literals, so no scalar is crossed in.
+    * SF): the 8-row query sets (sim_*), and the 1-row threshold scalar
+    * (ev_range_join). No centroid query is here: every IVF, PQ and
+    * clustering query, sim_kmeans_train included, ranks against centroids
+    * held on the driver and entered as literals, and the PQ sub-codebook
+    * is a local frame joined on its subspace; the classifier and unigram
+    * pairs enter their loop state (weights and bias, piece probabilities)
+    * the same way, so no scalar is crossed in.
     */
   private val bnljByDesign = Set(
     "sim_brute_topk", "sim_lsh_topk", // broadcast 8-query set joins are equi,
     //                                   but the scored cross with queries is
     //                                   a non-equi (=!=) bounded broadcast
-    "sim_ivf_assign", "sim_ivf_topk", "sim_kmeans_step",
-    "sim_cluster_purity", // same bounded centroid-broadcast subtree as ivf_assign
-    "sim_silhouette", // same bounded centroid-broadcast subtree as ivf_assign
-    "sim_ivf_balance", // same bounded centroid-broadcast subtree as ivf_assign
     "sim_recall_at_k", // composes brute + LSH, both bounded as above
-    "sim_pq_encode", "sim_graph_rank", "ev_range_join",
+    "sim_graph_rank", "ev_range_join",
     // 1-ROW aggregate scalars (vocab size / corpus total / normalizer)
     // crossJoined in as broadcasts — a bounded BNLJ by construction, same
     // class as ev_range_join's threshold scalar
     "txt_lm_perplexity", "txt_kn_perplexity", "txt_mix_weights", "txt_ppl_bucket",
     "txt_vocab_coverage", "dd_cluster_stats",
-    "sim_semantic_dedup", // same bounded centroid-broadcast subtree
     "txt_collocations", // 1-row (nu, nb) corpus-totals scalar broadcast
     "dd_threshold_sweep", // 5-row threshold-grid broadcast onto bounded pairs
     "txt_heaps_law", // 10-row checkpoint-grid broadcast (itself a 1-row max-id scalar)
@@ -54,10 +51,9 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "ev_lift", // 1-row user-count scalar broadcast
     "txt_dsir", // 1-row corpus/target token-totals scalar broadcast
     "sim_graph_rank_full", // 1-row per-round dangling-mass scalar broadcast
-    "sim_ivfpq_topk", // same bounded centroid-broadcast subtree as sim_ivf_*
     "q_approx_topk", // 1-row n_total scalar broadcast onto the ≤ k row output
     "q_zorder", // 1-row key-extremes scalar broadcast (range normalization)
-    "sim_recall_ivfpq", // composes brute + IVF-PQ, both bounded as above
+    "sim_recall_ivfpq", // composes brute + IVF-PQ, brute bounded as above
     "sim_recall_graph", // composes brute + graph search, both bounded as above
     "dd_lsh_recall", // 1-row n_true × 1-row n_found audit scalars
     "pipe_classified", // 1-row tercile-cutoff scalar over the classifier margins
@@ -65,7 +61,6 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "ev_rfm", // 1-row date-anchor + 1-row quintile-cutoff scalar broadcasts
     "pipe_epoch_plan", // 1-row Σa + spare-seat scalars over the bounded cell table
     "sim_graph_search", // 1-row entry-node scalar broadcast seeding the beam
-    "sim_outlier_prune", // same bounded centroid-broadcast subtree as sim_ivf_*
     "ev_cohort_ltv", // 1-row corpus-min date-anchor scalar broadcast
     "ev_ols_trend", // 1-row corpus-min day-anchor scalar broadcast
     "q_bloom_audit") // 1-row bits-set + dim-count readout scalar broadcasts
@@ -237,6 +232,21 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("sim_kmeans_train: build + noop write runs in at most 10 jobs and leaves nothing cached") {
     // two refit aggregates collected to the driver plus the sorted write
     assertJobsAndNoCache(10)(graft.ops.Similarity.kmeansTrain(spark, dir))
+  }
+
+  test("sim_ivf_assign: map-only up to its final sort, at most 6 jobs, nothing cached") {
+    val plan = graft.ops.Similarity.ivfAssign(spark, dir).queryExecution.executedPlan
+    def count(f: PartialFunction[SparkPlan, SparkPlan]) = collect(plan)(f).size
+    // the centroids are literals: the presentation orderBy's range
+    // partitioning is the only exchange, and nothing is joined or broadcast
+    assert(count { case e: ShuffleExchangeLike => e } === 1, plan)
+    assert(count { case w: WindowExec => w } === 0, plan)
+    assert(count { case j: BaseJoinExec => j } === 0, plan)
+    assert(count { case b: BroadcastExchangeLike => b } === 0, plan)
+    // the parquet footer read, the collected centroid aggregate (its
+    // shuffle map stage and its result), then the range-bounds sample, the
+    // map stage and the sorted write
+    assertJobsAndNoCache(6)(graft.ops.Similarity.ivfAssign(spark, dir))
   }
 
   test("txt_bpe_train: merges collected to the driver, at most 24 jobs, nothing cached") {
