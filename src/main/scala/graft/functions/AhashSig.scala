@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   *   sample_i = byte[pos_i] & 0xff
   *   bit_i    = 1  iff  sample_i · 64 > Σ samples      (exact integers)
   *
-  * Why a custom Catalyst Expression rather than the equivalent
-  * `aggregate(zip_with(transform(sequence(0,63), …)))` fold: higher-order
+  * Why a custom Catalyst Expression rather than the equivalent `aggregate`
+  * over `zip_with` over `transform(sequence(0,63), …)` fold: higher-order
   * functions are CodegenFallback — per-element lambda dispatch, three array
   * materializations, and a WholeStageCodegen break, measured 2–4× slower at
   * sf0.1 than the explode/window formulation it replaced. This expression

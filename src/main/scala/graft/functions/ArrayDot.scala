@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * This is the inner loop of every similarity-search operator
   * (graft.ops.Similarity / the embedding near-dup in graft.ops.Dedup): one
   * evaluation per candidate pair, 64 multiply-adds each. The higher-order
-  * `aggregate(zip_with(a, b, _*_), 0, _+_)` construction it replaces is
+  * `aggregate` over the `zip_with` product of a and b it replaces is
   * CodegenFallback — per-pair interpreted lambda dispatch plus an
   * intermediate product array — while this emits a tight primitive loop
   * inside WholeStageCodegen, no allocation.

@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGe
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `winnow(tokens)`: winnowing fingerprint statistics of ONE document
@@ -35,15 +34,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * formulation (posexplode one row per token, hash-shuffle on doc_id, lead
   * ×(K−1), count and a W-row min window, distinct, aggregate, join back)
   * moves the whole token stream through a shuffle to compute something one
-  * row already holds. The higher-order-function fold over the token array
-  * (`transform`/`aggregate` with an md5 per element) keeps it row-local but
-  * is CodegenFallback with an interpreted lambda and a string per shingle,
-  * measured 15× slower than the relational plan (see
-  * [[graft.ops.Dedup]]'s passage shingles). This expression runs one loop
-  * over the document's bytes: tokens are copied once into a space-joined
-  * buffer, each shingle is one digest over a slice of it, and the window
-  * minima are a W-wide scan over the key array. Memory is O(tokens of one
-  * document); the plan around it has no shuffle before its final sort.
+  * row already holds, and a higher-order-function fold over the token
+  * array is CodegenFallback with an interpreted lambda per shingle. This
+  * expression runs one loop over the document's bytes: the tokens are
+  * copied once into the space-joined buffer [[Shingles.Joined]] builds
+  * (the one `shingles(tokens, k)` returns its windows from), each shingle
+  * is one digest over a slice of it, and the window minima are a W-wide
+  * scan over the key array. Memory is O(tokens of one document); the plan
+  * around it has no shuffle before its final sort.
   */
 case class Winnow(child: Expression) extends UnaryExpression {
 
@@ -99,30 +97,15 @@ object Winnow {
     }
 
   private def selectionsOf(tokens: ArrayData): Array[Long] = {
-    val nTokens = tokens.numElements()
-    val n = nTokens - K + 1
+    val n = tokens.numElements() - K + 1
     if (n <= 0) return Array.emptyLongArray
-    // tokens joined by 0x20 in one buffer: token i starts at starts(i), and
-    // shingle i ends one byte before starts(i + K)
-    val starts = new Array[Int](nTokens + 1)
-    var i = 0
-    while (i < nTokens) {
-      starts(i + 1) = starts(i) + tokens.getUTF8String(i).numBytes() + 1
-      i += 1
-    }
-    val buf = new Array[Byte](starts(nTokens) - 1)
-    i = 0
-    while (i < nTokens) {
-      tokens.getUTF8String(i).writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + starts(i))
-      if (i + 1 < nTokens) buf(starts(i + 1) - 1) = ' '
-      i += 1
-    }
+    val sh = new Shingles.Joined(tokens)
     val md = Md5.get()
     val d = new Array[Byte](16)
     val keys = new Array[Long](n)
-    i = 0
+    var i = 0
     while (i < n) {
-      md.update(buf, starts(i), starts(i + K) - 1 - starts(i))
+      md.update(sh.buf, sh.starts(i), sh.length(i, K))
       md.digest(d, 0, 16)
       val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xff) << 16) | ((d(2) & 0xff) << 8) | (d(3) & 0xff)
       keys(i) = (h << PosBits) + (PosMask - i)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryModule, Tables}
+import graft.functions.Shingles
 
 /** Deduplication battery over `documents` (+ `embeddings` for vector
   * near-dup) — the headline LLM-pretraining-pipeline operators (SURVEY §7.2
@@ -67,26 +68,15 @@ object Dedup extends QueryModule {
       .select(col("doc_id"), toks.as("toks"))
       .select(col("doc_id"), fpExpr)
 
-  /** Distinct 3-token shingles. Callers pre-filter size(toks) >= 3 (short
-    * docs are excluded from dedup output by contract); boundedSequence makes
-    * the generator itself safe regardless.
+  /** docs → (doc_id, carry..., sh: distinct [[TriK]]-token shingle array).
+    * Docs shorter than TriK tokens have no shingle and are excluded from
+    * dedup output by contract.
     */
-  private def shingles(t: Column): Column =
-    array_distinct(transform(
-      graft.functions.Exprs.boundedSequence(lit(1), size(t) - 2),
-      i => concat_ws(" ",
-        element_at(t, i), element_at(t, i + 1), element_at(t, i + 2))))
-
-  /** docs → (doc_id, carry..., sh: distinct shingle array). */
-  private def shingled(s: SparkSession, dir: String, carry: Seq[String] = Nil): DataFrame =
-    shingledOf(Tables.documents(s, dir), carry)
-
   private[graft] def shingledOf(documents: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     val keep = col("doc_id") +: carry.map(col)
     documents
-      .select(keep :+ toks.as("toks"): _*)
-      .filter(size(col("toks")) >= 3)
-      .select(keep :+ shingles(col("toks")).as("sh"): _*)
+      .select(keep :+ array_distinct(Shingles(documents.sparkSession, toks, TriK)).as("sh"): _*)
+      .filter(size(col("sh")) > 0)
   }
 
   // ------------------------------------------------------------ dd_exact
@@ -418,7 +408,7 @@ object Dedup extends QueryModule {
       minJac: Double): DataFrame = {
     // sh feeds the signature path AND both verify sides — persist to avoid
     // re-tokenizing/re-shingling three times (the ngramJaccard lesson).
-    val sh = shingled(s, dir)
+    val sh = shingledOf(Tables.documents(s, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = lshCandidates(sh)
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
@@ -935,7 +925,7 @@ object Dedup extends QueryModule {
     * and the training corpus never self-joins.
     */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingled(s, dir, carry = Seq("source"))
+    val sh = shingledOf(Tables.documents(s, dir), carry = Seq("source"))
       .withColumn("is_bench", col("source").isin(BenchSources: _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val lng = bandLong(sh, carry = Seq("is_bench"))
@@ -1320,40 +1310,28 @@ object Dedup extends QueryModule {
     * OTHER document (distinct-per-doc, so within-doc repetition — already
     * measured by txt_repetition — cannot inflate it).
     *
-    * Scale shape: tokens posexplode once and shingle digests are built by a
-    * codegen'd md5 projection over lead() windows partitioned on the
-    * high-cardinality doc_id (skew-free); the per-doc distinct reuses that
-    * same partitioning (no extra exchange — hashpartitioning(doc_id)
-    * satisfies the (doc_id, gh) clustering); cross-doc frequency is one hash
-    * groupBy on the digest with map-side partials, and the join back is an
-    * equi-join on that digest. All shuffles carry fixed 32-byte digests,
-    * never token text; no all-pairs work at any corpus size.
+    * Scale shape: each document's distinct shingle digests are built in the
+    * map, from the row alone ([[passageShingles]]); cross-doc frequency is
+    * one hash groupBy on the digest with map-side partials, and the join
+    * back is an equi-join on that digest. All shuffles carry fixed 32-byte
+    * digests, never token text; no all-pairs work at any corpus size.
     */
   def passageOverlap(s: SparkSession, dir: String): DataFrame =
     passageOverlapOf(Tables.documents(s, dir))
 
   /** Distinct [[PassW]]-token passage-shingle digests per doc:
-    * (doc_id, carry..., gh). Fully relational (the txt_repetition shape,
-    * measured 15× over the md5-in-transform HOF formulation it replaced):
-    * posexplode once, lead(1..4) over the per-doc position window, then ONE
-    * codegen'd md5(concat_ws(...)) projection per shingle — no interpreted
-    * lambda dispatch, no per-row digest-array materialization. Docs shorter
-    * than PassW tokens drop out at the last-lead-null filter. The distinct
-    * reuses the window's doc_id hash partitioning (no extra exchange) and
-    * gives the distinct-per-doc contract: within-doc repetition cannot
-    * inflate any downstream count.
+    * (doc_id, carry..., gh). Row-local: one `shingles` call per document,
+    * `array_distinct` (the distinct-per-doc contract: within-doc
+    * repetition cannot inflate any downstream count), then one md5 per
+    * exploded shingle — no shuffle. Docs shorter than PassW tokens have no
+    * shingles and drop out.
     */
   private def passageShingles(docs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     val keep = col("doc_id") +: carry.map(col)
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val leads = (2 to PassW).map(i => lead("t", i - 1).over(w).as(s"t$i"))
     docs
-      .select(keep :+ posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "t")): _*)
-      .select(keep ++ (col("t") +: leads): _*)
-      .filter(col(s"t$PassW").isNotNull)
-      .select(keep :+ md5(concat_ws(" ",
-        col("t") +: (2 to PassW).map(i => col(s"t$i")): _*)).as("gh"): _*)
-      .distinct()
+      .select(keep :+ explode(array_distinct(
+        Shingles(docs.sparkSession, TextOps.tokens(col("text")), PassW))).as("sh"): _*)
+      .select(keep :+ md5(col("sh")).as("gh"): _*)
   }
 
   private[graft] def passageOverlapOf(docs: DataFrame): DataFrame = {
@@ -1408,7 +1386,7 @@ object Dedup extends QueryModule {
   private[graft] def passageDecontaminateWithRelease(
       s: SparkSession, dir: String): (DataFrame, () => Unit) = {
     // both the bench-set and training branches sit above the shingle
-    // pipeline — persist it or the window + digest work runs twice (the
+    // pipeline — persist it or the tokenize + digest work runs twice (the
     // passageOverlapOf lesson)
     val g = passageShingles(Tables.documents(s, dir), carry = Seq("source"))
       .withColumn("is_bench", col("source").isin(BenchSources: _*))
@@ -1551,9 +1529,8 @@ object Dedup extends QueryModule {
     * fixture's 10–99-token docs via [[SubK]]=20) fall out relationally,
     * with no suffix array and no all-pairs work:
     *
-    *  1. every [[SubK]]-token window hashes to an md5 digest (posexplode +
-    *     lead() over the per-doc position window — the [[passageShingles]]
-    *     shape, one codegen'd md5 projection, positions kept);
+    *  1. every [[SubK]]-token window hashes to an md5 digest, in the map
+    *     (posexplode of the row's `shingles`, positions kept);
     *  2. cross-doc matches come from the digest self-join, occurrence-
     *     pruned to [2, [[DfCap]]] (a window hash occurring in more
     *     positions is boilerplate; the cap also bounds join fan-out at
@@ -1573,16 +1550,12 @@ object Dedup extends QueryModule {
     substringDedupOf(Tables.documents(s, dir))
 
   private[graft] def substringDedupOf(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val leads = (2 to SubK).map(i => lead("t", i - 1).over(w).as(s"t$i"))
     // persist AFTER the occurrence filter (the containmentOf lesson): the
     // frame feeds both self-join sides and caches only rare-digest rows
     val rare = docs
-      .select(col("doc_id"), posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "t")))
-      .select(col("doc_id") +: col("pos") +: col("t") +: leads: _*)
-      .filter(col(s"t$SubK").isNotNull)
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
-        md5(concat_ws(" ", col("t") +: (2 to SubK).map(i => col(s"t$i")): _*)).as("wh"))
+      .select(col("doc_id"), posexplode(
+        Shingles(docs.sparkSession, TextOps.tokens(col("text")), SubK)).as(Seq("pos", "sh")))
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), md5(col("sh")).as("wh"))
       .withColumn("df", count(lit(1)).over(Window.partitionBy("wh")))
       .filter(col("df").between(2, DfCap))
       .drop("df")
@@ -1612,9 +1585,12 @@ object Dedup extends QueryModule {
   }
 
   /** The [[SubK]] window width and [[DfCap]] occurrence cap, exposed for the
-    * streaming twin so the two paths cannot drift.
+    * streaming twin, and the [[TriK]] trigram width shared by the MinHash
+    * shingles, txt_repetition, txt_ngram_novelty and the novelty twins, so
+    * batch and stream cannot drift.
     */
   private[graft] def subWindowK: Int = SubK
+  private[graft] final val TriK = 3
   private[graft] def subDfCap: Int = DfCap
 
   // ---------------------------------------------- dd_cdc_dedup

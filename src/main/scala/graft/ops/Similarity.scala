@@ -110,7 +110,7 @@ object Similarity extends QueryModule {
   /** Exact integer dot product (sequential fold, but order-independent
     * anyway since integer addition is associative). Backed by the native
     * codegen'd [[graft.functions.ArrayDot]] expression — the HOF
-    * `aggregate(zip_with(...))` construction it replaces is CodegenFallback
+    * `aggregate`-over-`zip_with` construction it replaces is CodegenFallback
     * (interpreted lambda dispatch per candidate pair, plus an intermediate
     * product array); identical null semantics and fold order, so oracle
     * hashes are unchanged. Callers must hold a session where
@@ -1524,7 +1524,7 @@ object Similarity extends QueryModule {
     * shuffle carries one (vec, m) row per subvector. Distances stay in the
     * fixed-point domain and expand via the dot identity
     * |a−b|² = a·a − 2·a·b + b·b over three native codegen'd [[idot]]-style
-    * folds — the `aggregate(zip_with(...))` squared-diff fold it replaces
+    * folds — the `aggregate`-over-`zip_with` squared-diff fold it replaces
     * was CodegenFallback, an interpreted lambda per (vec, m, codeword)
     * candidate (the plan's hot inner loop). Each dot folds sequentially in
     * IEEE order and the oracle computes the SAME expression, so the two

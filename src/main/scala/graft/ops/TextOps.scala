@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryModule, Tables}
 import graft.core.MapReduce.WhitespaceClass
-import graft.functions.Winnow
+import graft.functions.{Shingles, Winnow}
 
 /** Text-analysis battery over the `documents` table: tokenization, token
   * statistics, term frequencies, n-grams, quality scoring, language-ID
@@ -83,19 +83,12 @@ object TextOps extends QueryModule {
   /** Adjacent-token bigrams per document (expression-built, no shuffle), then
     * global top-100 by count.
     */
-  def topBigrams(s: SparkSession, dir: String): DataFrame = {
-    val toks = tokens(col("text"))
+  def topBigrams(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .select(toks.as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => concat_ws(" ", a, b))).as("bigram"))
+      .select(explode(Shingles(s, tokens(col("text")), 2)).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("bigram").asc)
       .limit(100)
-  }
 
   private val MinColloc = 5 // bigram support floor for PMI ranking
 
@@ -117,15 +110,11 @@ object TextOps extends QueryModule {
   def collocations(s: SparkSession, dir: String): DataFrame = {
     val toks = tokens(col("text"))
     val bg = Tables.documents(s, dir)
-      .select(toks.as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
-      .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-    val cb = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
+      .select(explode(Shingles(s, toks, 2)).as("bigram"))
+    val cb = bg.groupBy("bigram").agg(count(lit(1)).as("cb"))
       .filter(col("cb") >= MinColloc)
+      .withColumn("w1", substring_index(col("bigram"), " ", 1))
+      .withColumn("w2", substring_index(col("bigram"), " ", -1))
     val uni = Tables.documents(s, dir)
       .select(explode(toks).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
@@ -136,8 +125,7 @@ object TextOps extends QueryModule {
     cb.join(uni.select(col("t").as("w1"), col("c").as("c1")), "w1")
       .join(uni.select(col("t").as("w2"), col("c").as("c2")), "w2")
       .crossJoin(broadcast(totals))
-      .select(concat_ws(" ", col("w1"), col("w2")).as("bigram"),
-        col("cb").as("cnt"), pmi.as("pmi"))
+      .select(col("bigram"), col("cb").as("cnt"), pmi.as("pmi"))
       .orderBy(col("pmi").desc, col("bigram").asc)
       .limit(100)
   }
@@ -547,10 +535,11 @@ object TextOps extends QueryModule {
     * single most frequent token, and the fraction of duplicate trigrams —
     * the two cheapest filters against degenerate boilerplate / looping text.
     *
-    * Scale shape: the trigram stats are per-row expressions (one scan, no
-    * shuffle — `array_distinct` is linear in doc length); the top-token count
-    * is relational (explode → (doc, token) groupBy with map-side partials →
-    * per-doc max) because a per-row O(len²) fold would blow up on long
+    * Scale shape: the token and trigram counts are per-row expressions
+    * over the row's `shingles` (no shuffle — `array_distinct` is linear in
+    * doc length); the top-token count is relational (explode → (doc,
+    * token) groupBy with map-side partials → per-doc max, joined back on
+    * doc_id) because a per-row O(len²) fold would blow up on long
     * documents. Flags are computed from the ROUNDED ratios in both engines,
     * so a boundary value can never split Spark from the oracle.
     */
@@ -558,40 +547,30 @@ object TextOps extends QueryModule {
     repetitionOf(Tables.documents(s, dir))
 
   private[graft] def repetitionOf(docs: DataFrame): DataFrame = {
-    // Fully relational: one posexplode feeds BOTH signal branches (persisted
-    // — the minhashPairs lesson). A per-row formulation (nested zip_with of
-    // shifted slices + array_distinct) was 4× slower measured at sf0.1:
-    // higher-order functions are CodegenFallback, so every token paid
-    // interpreted lambda dispatch; lead/groupBy stay inside codegen and the
-    // per-doc window partitions on high-cardinality doc_id.
-    val tok = docs
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val triStats = tok
-      .withColumn("t2", lead("t", 1).over(w))
-      .withColumn("t3", lead("t", 2).over(w))
-      .filter(col("t3").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("t"), col("t2"), col("t3")).as("tri"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tri"), countDistinct("tri").as("n_tri_distinct"))
-    val top = tok.groupBy("doc_id", "t").agg(count(lit(1)).as("cnt"))
-      .groupBy("doc_id").agg(max("cnt").as("top_cnt"), sum("cnt").as("n_tokens"))
-    docs.select("doc_id").distinct()
+    // toks is its own projection: the tokenizer's filter lambda gets no
+    // subexpression elimination and is referenced twice below
+    val toks = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
+    val top = toks.select(col("doc_id"), explode(col("toks")).as("t"))
+      .groupBy("doc_id", "t").agg(count(lit(1)).as("cnt"))
+      .groupBy("doc_id").agg(max("cnt").as("top_cnt"))
+    // size() of a NULL array is NULL or -1 depending on the session:
+    // greatest(…, 0) reads both as 0
+    val tri = Shingles(docs.sparkSession, col("toks"), Dedup.TriK)
+    toks.select(col("doc_id"),
+        greatest(size(col("toks")), lit(0)).as("n_tokens"),
+        greatest(size(tri), lit(0)).as("n_tri"),
+        size(array_distinct(tri)).as("n_tri_distinct"))
       .join(top, Seq("doc_id"), "left")
-      .join(triStats, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).cast("int").as("n_tokens"),
+      .select(col("doc_id"), col("n_tokens"),
         round(coalesce(col("top_cnt"), lit(0L)).cast("double")
-          / greatest(coalesce(col("n_tokens"), lit(0L)), lit(1L)), 4).as("top_token_frac"),
-        coalesce(col("n_tri"), lit(0L)).cast("int").as("n_tri"),
-        when(coalesce(col("n_tri"), lit(0L)) === 0, lit(0.0)).otherwise(
+          / greatest(col("n_tokens"), lit(1)), 4).as("top_token_frac"),
+        col("n_tri"),
+        when(col("n_tri") === 0, lit(0.0)).otherwise(
           round(lit(1.0) - col("n_tri_distinct").cast("double") / col("n_tri"), 4))
           .as("dup_trigram_frac"))
       .withColumn("repetitive",
         col("top_token_frac") > 0.2 || col("dup_trigram_frac") > 0.3)
       .orderBy("doc_id")
-      .transform(Dedup.materializeThenRelease(_, tok))
   }
 
   // ------------------------------------------------------ txt_ngram_novelty
@@ -604,31 +583,25 @@ object TextOps extends QueryModule {
     * papers use to front-load novel text and to cap near-copy chains that
     * per-pair dedup misses.
     *
-    * Scale shape: one explode+lead pass builds distinct (doc, trigram)
-    * pairs (the [[repetitionOf]] trigram shape, multiplicity pre-folded by
-    * the distinct); first-occurrence is a trigram-keyed hash aggregate
-    * with map-side partials (the inverted index a streaming curation pass
-    * would maintain incrementally); novelty joins the pairs back on the
-    * trigram key — equi-joins on high-cardinality keys only, no corpus
-    * windows, AQE skew-splits any hot boilerplate trigram. Docs with <3
-    * tokens carry n_tri_distinct=0 and NULL novelty (the lm_perplexity
-    * contract: unscoreable ≠ dropped).
+    * Scale shape: each row's `array_distinct(shingles)` explodes into its
+    * distinct (doc, trigram) pairs in the map (multiplicity pre-folded, no
+    * window and no distinct shuffle); first-occurrence is a trigram-keyed
+    * hash aggregate with map-side partials (the inverted index a streaming
+    * curation pass would maintain incrementally); novelty joins the pairs
+    * back on the trigram key — equi-joins on high-cardinality keys only,
+    * no corpus windows, AQE skew-splits any hot boilerplate trigram. Docs
+    * with <3 tokens carry n_tri_distinct=0 and NULL novelty (the
+    * lm_perplexity contract: unscoreable ≠ dropped).
     */
   def ngramNovelty(s: SparkSession, dir: String): DataFrame =
     ngramNoveltyOf(Tables.documents(s, dir))
 
   private[graft] def ngramNoveltyOf(docs: DataFrame): DataFrame = {
-    val tok = docs
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
     // distinct (doc, trigram) pairs feed BOTH the first-doc index build and
-    // the join-back probe — persist so the explode+window pass runs once
-    val docTri = tok
-      .withColumn("t2", lead("t", 1).over(w))
-      .withColumn("t3", lead("t", 2).over(w))
-      .filter(col("t3").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("t"), col("t2"), col("t3")).as("tri"))
-      .distinct()
+    // the join-back probe — persist so the tokenize + shingle pass runs once
+    val docTri = docs
+      .select(col("doc_id"), explode(array_distinct(
+        Shingles(docs.sparkSession, tokens(col("text")), Dedup.TriK))).as("tri"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val firstDoc = docTri.groupBy("tri").agg(min("doc_id").as("first_doc"))
     val nov = docTri.join(firstDoc, "tri")
@@ -874,11 +847,7 @@ object TextOps extends QueryModule {
     import org.apache.spark.sql.types.DecimalType
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val big = docs.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => concat_ws(" ", a, b))).as("bg"))
+    val big = docs.select(col("doc_id"), explode(Shingles(s, col("toks"), 2)).as("bg"))
     val docBig = big.groupBy("doc_id", "bg").agg(count(lit(1)).as("k"))
     val cb = big.groupBy("bg").agg(count(lit(1)).as("cb"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
@@ -938,11 +907,8 @@ object TextOps extends QueryModule {
   private[graft] def knPerplexityOf(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val docs = documents.select(col("doc_id"), tokens(col("text")).as("toks"))
-    val big = docs.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => concat_ws(" ", a, b))).as("bg"))
+    val big = docs.select(col("doc_id"),
+      explode(Shingles(documents.sparkSession, col("toks"), 2)).as("bg"))
     val docBig = big.groupBy("doc_id", "bg").agg(count(lit(1)).as("k"))
     // the bigram count table feeds cs, nc, the type total AND the scoring
     // join — persist so the explode+aggregate runs once
@@ -1462,13 +1428,12 @@ object TextOps extends QueryModule {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var exhausted = false
     while (merges.size < BpeMerges && !exhausted) {
+      // a symbol pair splits back at its one space (symbols hold none)
       val top = vocab
-        .select(col("f"), bpeSymbols(bpeApply(col("ws"), merges.toSeq)).as("s"))
-        .filter(size(col("s")) >= 2)
-        .select(col("f"), col("s"),
-          explode(sequence(lit(1), size(col("s")) - 1)).as("i"))
-        .select(element_at(col("s"), col("i")).as("lhs"),
-          element_at(col("s"), col("i") + 1).as("rhs"), col("f"))
+        .select(col("f"), explode(Shingles(docs.sparkSession,
+          bpeSymbols(bpeApply(col("ws"), merges.toSeq)), 2)).as("p"))
+        .select(substring_index(col("p"), " ", 1).as("lhs"),
+          substring_index(col("p"), " ", -1).as("rhs"), col("f"))
         .groupBy("lhs", "rhs").agg(sum("f").as("pair_count"))
         .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
         .limit(1)

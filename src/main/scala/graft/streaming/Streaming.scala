@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.Shingles
 import graft.ops.Streamish
 
 /** Running per-user totals — the state carried by [[Streaming.runningUserTotals]]. */
@@ -912,8 +913,9 @@ object Streaming {
     * State is one Long per distinct trigram — the same unbounded-dedup
     * class as the fingerprint-dedup twin; [[noveltyViaStateTtl]] is the
     * production deployment, bounding it with a processing-time TTL and a
-    * documented exactness horizon. Trigrams derive per-row (a transform
-    * over the token array — no cross-row window, which streaming
+    * documented exactness horizon. Trigrams derive per-row (the batch
+    * operator's `shingles` of the row's tokens, at the same
+    * [[graft.ops.Dedup.TriK]] width — no cross-row window, which streaming
     * disallows); within-batch duplicates collapse inside the state
     * function.
     */
@@ -936,18 +938,12 @@ object Streaming {
   def noveltyViaStateTtl(
       s: SparkSession, docs: DataFrame, ttlMs: Long): Dataset[TriNovel] = {
     import s.implicits._
-    val toks = graft.ops.TextOps.tokens(col("text"))
+    val tri = Shingles(s, graft.ops.TextOps.tokens(col("text")), graft.ops.Dedup.TriK)
     val timeoutConf =
       if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     docs
-      .select(col("doc_id"), toks.as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(transform(
-        graft.functions.Exprs.boundedSequence(lit(1), size(col("toks")) - 2),
-        i => concat_ws(" ", element_at(col("toks"), i),
-          element_at(col("toks"), i + 1), element_at(col("toks"), i + 2))))
-        .as("tri"))
+      .select(col("doc_id"), explode(tri).as("tri"))
       .as[(Long, String)]
       .groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
@@ -991,18 +987,12 @@ object Streaming {
       s: SparkSession, docs: DataFrame, ttlMs: Long,
       watermarkDelay: String = "0 seconds"): Dataset[TriNovel] = {
     import s.implicits._
-    val toks = graft.ops.TextOps.tokens(col("text"))
+    val tri = Shingles(s, graft.ops.TextOps.tokens(col("text")), graft.ops.Dedup.TriK)
     docs
       .withWatermark("event_time", watermarkDelay)
-      .select(col("doc_id"), col("event_time"), toks.as("toks"))
-      .filter(size(col("toks")) >= 3)
       // the watermarked column itself must reach the stateful operator —
       // converting it to a long here would project the watermark away
-      .select(col("doc_id"), col("event_time"), explode(transform(
-        graft.functions.Exprs.boundedSequence(lit(1), size(col("toks")) - 2),
-        i => concat_ws(" ", element_at(col("toks"), i),
-          element_at(col("toks"), i + 1), element_at(col("toks"), i + 2))))
-        .as("tri"))
+      .select(col("doc_id"), col("event_time"), explode(tri).as("tri"))
       .as[(Long, java.sql.Timestamp, String)]
       .groupByKey(_._3)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -1072,9 +1062,9 @@ object Streaming {
   }
 
   /** Streaming twin of dd_substring's window-match stage: the per-digest
-    * inverted index kept as state. Window digests derive per-row (a
-    * transform over the token array — no cross-row window, which streaming
-    * disallows; same digests as the batch lead-window projection); each
+    * inverted index kept as state. Window digests derive per-row exactly as
+    * in the batch operator (posexplode of the row's `shingles`, one md5
+    * each — no cross-row window, which streaming disallows); each
     * digest's state holds the ≤ [[graft.ops.Dedup.subDfCap]] (doc, pos)
     * occurrences seen so far, and a micro-batch's arrivals emit exactly the
     * NEW cross-doc matches (new×old ∪ new×new, oriented doc_a < doc_b).
@@ -1114,20 +1104,14 @@ object Streaming {
   def substringMatchesViaStateTtl(
       s: SparkSession, docs: DataFrame, ttlMs: Long): Dataset[WinMatch] = {
     import s.implicits._
-    val k = graft.ops.Dedup.subWindowK
     val cap = graft.ops.Dedup.subDfCap
-    val toks = graft.ops.TextOps.tokens(col("text"))
+    val windows = Shingles(s, graft.ops.TextOps.tokens(col("text")), graft.ops.Dedup.subWindowK)
     val timeoutConf =
       if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     docs
-      .select(col("doc_id"), toks.as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"), posexplode(transform(
-        graft.functions.Exprs.boundedSequence(lit(1), size(col("toks")) - (k - 1)),
-        i => md5(concat_ws(" ", slice(col("toks"), i, lit(k))))))
-        .as(Seq("off", "wh")))
-      .select(col("wh"), col("doc_id"), (col("off") + 1).cast("long").as("pos"))
+      .select(col("doc_id"), posexplode(windows).as(Seq("off", "sh")))
+      .select(md5(col("sh")).as("wh"), col("doc_id"), (col("off") + 1).cast("long").as("pos"))
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
@@ -1182,19 +1166,13 @@ object Streaming {
       s: SparkSession, docs: DataFrame, ttlMs: Long,
       watermarkDelay: String = "0 seconds"): Dataset[WinMatch] = {
     import s.implicits._
-    val k = graft.ops.Dedup.subWindowK
     val cap = graft.ops.Dedup.subDfCap
-    val toks = graft.ops.TextOps.tokens(col("text"))
+    val windows = Shingles(s, graft.ops.TextOps.tokens(col("text")), graft.ops.Dedup.subWindowK)
     docs
       .withWatermark("event_time", watermarkDelay)
-      .select(col("doc_id"), col("event_time"), toks.as("toks"))
-      .filter(size(col("toks")) >= k)
       // keep the watermarked column intact through to the stateful operator
-      .select(col("doc_id"), col("event_time"), posexplode(transform(
-        graft.functions.Exprs.boundedSequence(lit(1), size(col("toks")) - (k - 1)),
-        i => md5(concat_ws(" ", slice(col("toks"), i, lit(k))))))
-        .as(Seq("off", "wh")))
-      .select(col("wh"), col("doc_id"), (col("off") + 1).cast("long").as("pos"),
+      .select(col("doc_id"), col("event_time"), posexplode(windows).as(Seq("off", "sh")))
+      .select(md5(col("sh")).as("wh"), col("doc_id"), (col("off") + 1).cast("long").as("pos"),
         col("event_time"))
       .as[(String, Long, Long, java.sql.Timestamp)]
       .groupByKey(_._1)

@@ -15,7 +15,9 @@ import scala.collection.mutable
   *  - per stage, by task time: wall span, tasks, shuffle write and read MB,
   *    shuffle records written and spill MB — which exchange is fat.
   *
-  * Rep 1 also pays the session's warmup.
+  * Rep 1 also pays the session's warmup, and rep 2 is not always warm
+  * yet, so a closing line gives the medians of wall, driver gap and job
+  * count over reps 2..N: the figure to compare between two builds.
   *
   * Usage: graft.tools.Probe <queryName> [reps]   (env SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
   */
@@ -33,6 +35,12 @@ object Probe {
       if (e > s) { covered += e - s; cursor = e }
     }
     (t1 - t0) - covered
+  }
+
+  /** The median of `xs`: the mean of the two middle values when even. */
+  def median(xs: Seq[Long]): Double = {
+    val s = xs.sorted
+    (s((s.size - 1) / 2) + s(s.size / 2)) / 2.0
   }
 
   private final case class Job(id: Int, start: Long, var end: Long = -1L)
@@ -85,6 +93,7 @@ object Probe {
     val spark = Local.session()
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
+    val warm = mutable.ArrayBuffer.empty[(Long, Long, Long)] // wall, gap, jobs
     for (rep <- 1 to reps) {
       Local.sweep(spark)
       Local.drainBus(spark.sparkContext)
@@ -96,6 +105,7 @@ object Probe {
       val (jobs, stages) = rec.synchronized((rec.jobs.toVector, rec.stages.toVector))
       val wall = t1 - t0
       val gap = driverGap(t0, t1, jobs.map(j => (j.start, j.end)))
+      if (rep >= 2) warm += ((wall, gap, jobs.size.toLong))
       def s(ms: Long) = ms / 1000.0
       println(f"\n=== $name rep $rep: wall ${s(wall)}%.2f s, job-covered ${s(wall - gap)}%.2f s, " +
         f"driver gap ${s(gap)}%.2f s, ${jobs.size} jobs, ${stages.size} stages ===")
@@ -114,6 +124,9 @@ object Probe {
           f"${st.spillMb}%8.2f  ${st.name}")
       }
     }
+    if (warm.nonEmpty)
+      println(f"\n=== $name median of reps 2..$reps: wall ${median(warm.map(_._1).toSeq) / 1000}%.2f s, " +
+        f"driver gap ${median(warm.map(_._2).toSeq) / 1000}%.2f s, ${median(warm.map(_._3).toSeq)}%.1f jobs ===")
     spark.stop()
   }
 }

@@ -940,6 +940,16 @@ class OpsSpec extends AnyFunSuite {
     assert(out(1) === ((2L, 2L, 1L, 0.5)))
     // 6 positional shingles but 5 distinct; the repeated one is NOT a dup
     assert(out(2) === ((3L, 5L, 0L, 0.0)))
+    // degenerate docs: NULL text, "" and K − 1 tokens have no shingle and
+    // no row; a doc of exactly K tokens repeating the shared passage is
+    // one all-dup shingle. Pinned to the lead-window formulation's output.
+    val degenerate = Seq[(Long, Option[String])](
+      5L -> None, 6L -> Some(""), 7L -> Some("alpha beta gamma delta"),
+      8L -> Some("alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    val withDegenerate = Dedup.passageOverlapOf(docs.unionByName(degenerate))
+      .select("doc_id", "n_shingles", "n_dup", "dup_frac")
+      .as[(Long, Long, Long, Double)].collect().sortBy(_._1)
+    assert(withDegenerate.toSeq === out.toSeq :+ ((8L, 1L, 1L, 1.0)))
   }
 
   test("labelPropagate: pointer doubling converges in O(log n) rounds on an adversarial chain") {
@@ -1044,6 +1054,16 @@ class OpsSpec extends AnyFunSuite {
       (1L, 3L, 1L, 1L, 40L),   // whole-doc run for the exact duplicate
       (2L, 3L, 4L, 8L, 25L),   // dup doc inherits the planted run
       (4L, 5L, 6L, 6L, 20L)))  // run of exactly K tokens = one window
+    // degenerate docs: NULL text, "" and K − 1 tokens have no window; a doc
+    // of exactly K tokens (c6..c25) is one window shared with docs 4 and 5.
+    // Pinned to the lead-window formulation's output.
+    val degenerate = Seq[(Long, Option[String])](
+      7L -> None, 8L -> Some(""),
+      9L -> Some((6 to 24).map(i => s"c$i").mkString(" ")),
+      10L -> Some((6 to 25).map(i => s"c$i").mkString(" "))).toDF("doc_id", "text")
+    val withDegenerate = Dedup.substringDedupOf(docs.unionByName(degenerate))
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    assert(withDegenerate === out ++ Set((4L, 10L, 6L, 1L, 20L), (5L, 10L, 6L, 1L, 20L)))
   }
 
   test("dd_substring: island decomposition matches a brute-force maximal-run scan on a random corpus") {
@@ -2204,6 +2224,17 @@ class OpsSpec extends AnyFunSuite {
       (3L, 0, 0, None),
       (4L, 2, 0, Some(0.0)))
     assert(out === expected)
+    // degenerate docs: NULL text, "" and k − 1 tokens are unscoreable rows;
+    // a doc of exactly k tokens holds one trigram, already introduced by
+    // doc 1. Pinned to the lead-window formulation's output.
+    val degenerate = Seq[(Long, Option[String])](
+      5L -> None, 6L -> Some(""), 7L -> Some("b c"), 8L -> Some("b c d"))
+      .toDF("doc_id", "text")
+    val withDegenerate = TextOps.ngramNoveltyOf(docs.unionByName(degenerate))
+      .select("doc_id", "n_tri_distinct", "n_novel", "novelty")
+      .as[(Long, Int, Int, Option[Double])].collect().toSeq
+    assert(withDegenerate === expected ++ Seq(
+      (5L, 0, 0, None), (6L, 0, 0, None), (7L, 0, 0, None), (8L, 1, 0, Some(0.0))))
   }
 
   test("sim_ivfpq_topk: dense ranks per query, ADC distances nondecreasing") {

@@ -4,8 +4,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Sequence, ZipWith}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -274,6 +276,57 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // the parquet footer read, the range-bounds sample, the map stage and
     // the sorted write
     assertJobsAndNoCache(4)(graft.ops.TextOps.winnowing(spark, dir))
+  }
+
+  /** Every operator of `plan`, those of the frames cached under its
+    * in-memory scans included: a persisted frame's shape lives there.
+    */
+  private def operators(plan: SparkPlan): Seq[SparkPlan] = {
+    val nodes = collect(plan) { case p => p }
+    nodes ++ nodes.collect { case m: InMemoryTableScanExec => m.relation.cachedPlan }
+      .flatMap(operators)
+  }
+
+  private def operatorsOf(name: String): Seq[SparkPlan] =
+    operators(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+
+  test("k-token windows come from shingles: no zip_with, no transform over a position sequence") {
+    // higher-order window builders are CodegenFallback; these queries have
+    // no other higher-order transform
+    val native = Seq("dd_passage_overlap", "dd_passage_decontaminate", "dd_bloom_decontaminate",
+      "dd_containment", "dd_substring", "txt_repetition", "txt_ngram_novelty", "txt_bigrams",
+      "txt_collocations", "txt_lm_perplexity", "txt_kn_perplexity")
+    // the MinHash family keeps the transforms that hash its shingle set
+    val minhash = Seq("dd_neardup", "dd_neardup_ingest", "dd_lsh_recall", "dd_edit_verify",
+      "dd_cluster", "dd_survivors", "dd_decontaminate")
+    val offenders = (native ++ minhash).flatMap { name =>
+      val exprs = operatorsOf(name).flatMap(_.expressions).flatMap(_.collect { case e => e })
+      val windowBuilders = exprs.collect {
+        case z: ZipWith => z
+        case t: ArrayTransform if !minhash.contains(name) ||
+          t.argument.exists(_.isInstanceOf[Sequence]) => t
+      }
+      windowBuilders.headOption.map(e => s"$name: ${e.prettyName}")
+    }
+    Local.sweep(spark)
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  test("per-doc shingle queries shuffle no token stream on doc_id") {
+    val windowed = Seq("txt_repetition", "txt_ngram_novelty", "dd_passage_overlap").flatMap { name =>
+      val n = operatorsOf(name).count(_.isInstanceOf[WindowExec])
+      if (n == 0) None else Some(s"$name: $n windows")
+    }
+    // dd_substring keeps its occurrence window (on the digest) and its
+    // island window (on the doc pair and diagonal)
+    val onDocId = operatorsOf("dd_substring").count {
+      case w: WindowExec => w.partitionSpec.exists(_.references.exists(_.name == "doc_id"))
+      case _ => false
+    }
+    val offenders = windowed ++
+      (if (onDocId == 0) None else Some(s"dd_substring: $onDocId windows on doc_id"))
+    Local.sweep(spark)
+    assert(offenders.isEmpty, offenders.mkString("; "))
   }
 
   test("no cartesian products anywhere; nested-loop joins only where bounded by design") {

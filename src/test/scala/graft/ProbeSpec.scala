@@ -1,9 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tools.Probe.driverGap
+import graft.tools.Probe.{driverGap, median}
 
-/** The probe's driver gap: wall time in [t0, t1] that no job span covers. */
+/** The probe's driver gap (wall time in [t0, t1] that no job span covers)
+  * and the median its closing line reports.
+  */
 class ProbeSpec extends AnyFunSuite {
 
   test("driver gap: disjoint jobs leave the time between them") {
@@ -20,5 +22,10 @@ class ProbeSpec extends AnyFunSuite {
 
   test("driver gap: a job that never finished runs to the end of the window") {
     assert(driverGap(0, 100, Seq((10L, 20L), (60L, -1L))) === 50)
+  }
+
+  test("median: the middle value, or the mean of the two middle values") {
+    assert(median(Seq(5L, 1L, 3L)) === 3.0)
+    assert(median(Seq(4L, 1L, 3L, 2L)) === 2.5)
   }
 }

@@ -78,5 +78,20 @@ class TextFilterSpec extends AnyFunSuite {
     // diverse: every token and trigram unique -> nothing repetitive
     val topFrac = BigDecimal(1.0 / 90).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(got(1) === ((2L, 90, topFrac, 88, 0.0, false)))
+    // degenerate docs (NULL text, "", k − 1 and k tokens for the k = 3
+    // trigram) leave the rows above unchanged and each get a row; pinned to
+    // the relational lead-window formulation's output
+    val degenerate = Seq[(Long, Option[String])](
+      3L -> None, 4L -> Some(""), 5L -> Some("u1 u2"), 6L -> Some("x x x"))
+      .toDF("doc_id", "text")
+    val withDegenerate = TextOps.repetitionOf(
+        docs(1L -> looping, 2L -> diverse).unionByName(degenerate))
+      .select("doc_id", "n_tokens", "top_token_frac", "n_tri", "dup_trigram_frac", "repetitive")
+      .as[(Long, Int, Double, Int, Double, Boolean)].collect().sortBy(_._1).toSeq
+    assert(withDegenerate === got ++ Seq(
+      (3L, 0, 0.0, 0, 0.0, false),
+      (4L, 0, 0.0, 0, 0.0, false),
+      (5L, 2, 0.5, 0, 0.0, true),
+      (6L, 3, 1.0, 1, 0.0, true)))
   }
 }

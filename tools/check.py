@@ -19,9 +19,9 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 def run_verify(sfdir, outdir):
     # imported here: callers that load this file by path for table_sig do
     # not have tools/ on sys.path
-    from measure import java_cmd
+    from measure import cpus, java_cmd
     cmd = java_cmd("graft.Verify", sfdir, outdir)
-    env = {"PATH": "/usr/bin:/bin", "SPARK_GRAFT_CPUS": "8"}
+    env = {"PATH": "/usr/bin:/bin", "SPARK_GRAFT_CPUS": str(cpus())}
     if "SPARK_GRAFT_VERIFY_ONLY" in os.environ:
         env["SPARK_GRAFT_VERIFY_ONLY"] = os.environ["SPARK_GRAFT_VERIFY_ONLY"]
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
