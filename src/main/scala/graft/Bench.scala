@@ -26,7 +26,7 @@ object Bench {
     locally {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      spark.read.parquet(s"$sfDir/region.parquet")
+      Tables.region(spark, sfDir)
         .withColumn("r", row_number().over(Window.partitionBy("r_name").orderBy("r_regionkey")))
         .groupBy("r").agg(count(lit(1)))
         .write.format("noop").mode("overwrite").save()
@@ -122,13 +122,16 @@ object Bench {
     // of identical code was normal); with the sentinel inline, that call
     // is made from data: a slow query next to floor-level sentinel
     // samples is a code problem, a slow query inside a slow sentinel
-    // window is the environment.
+    // window is the environment. Its rows scale with the cores (10 Mi at
+    // 32), so each core probes the same work on any box: a fixed 10 Mi
+    // rows took 13-19 s per probe on 4 cores.
+    val sentinelRows = (10L << 20) * cpus / 32
     def sentinelOnce(): Double = {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       Local.sweep(spark)
       val t0 = System.nanoTime()
-      spark.range(0, 10L << 20, 1, cpus)
+      spark.range(0, sentinelRows, 1, cpus)
         .select((col("id") % 100000).as("k"),
           pmod(xxhash64(col("id")), lit(1L << 32)).as("h")) // ANSI-safe sums
         .withColumn("rk", row_number().over(
@@ -243,10 +246,11 @@ object Bench {
         if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
       }
     val floorPath = Paths.get(sys.env.getOrElse("SPARK_GRAFT_FLOOR_FILE", ".sentinel_floor"))
-    // v3: the synthetic sentinel is data-independent, so the floor is a
+    // v4: the synthetic sentinel is data-independent, so the floor is a
     // property of the BOX (cpus) alone — one floor per machine shape, any
-    // data directory. v2's per-dir lineitem-sentinel entries are orphaned.
-    val floorKey = s"v3|$cpus"
+    // data directory. v3's entries timed 10 Mi rows whatever the cores and
+    // are orphaned, as are v2's per-dir lineitem-sentinel entries.
+    val floorKey = s"v4|$cpus"
     val hist: Map[String, Double] =
       if (Files.exists(floorPath))
         Files.readAllLines(floorPath).toArray(Array.empty[String]).toSeq

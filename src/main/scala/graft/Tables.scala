@@ -1,21 +1,77 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md / FIXTURES.md §B).
   *
   * All queries take a scale-factor directory and read only from it; column
   * pruning + predicate pushdown then reach the parquet scan for free.
+  *
+  * Schema cache: Spark infers a parquet schema by reading footers in a
+  * Spark job of its own, so an uncached read opens every query with one
+  * extra job per table. Each table's inferred `StructType` is kept once
+  * per JVM, and a warm read passes it to `spark.read.schema(...)`, which
+  * skips inference and launches no job. The key is everything inference
+  * reads: the table path, every leaf file's (name, size, mtime) and the
+  * parquet inference confs in [[InferenceConfs]]. A table rewritten in
+  * place or a flipped conf is therefore a miss, never a stale schema; a
+  * path that cannot be listed is read uncached, so Spark reports the
+  * error it always did. Only the schema is cached, never a DataFrame or
+  * relation: each call builds a fresh relation with fresh expression ids,
+  * so a query that reads one table twice (a self-join) resolves exactly
+  * as it would without the cache.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The SQL confs parquet schema inference reads. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private final case class SchemaKey(
+      path: String, files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]
+
+  /** The cache key of `path` as it stands now; None if it cannot be listed. */
+  private def keyOf(spark: SparkSession, path: String): Option[SchemaKey] = Try {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+    SchemaKey(path, files, InferenceConfs.map(spark.conf.getOption))
+  }.toOption
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = keyOf(spark, path)
+    key.flatMap(k => Option(schemas.get(k))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        // inference runs outside any map lock; a racing miss infers twice
+        val df = spark.read.parquet(path)
+        key.foreach(schemas.putIfAbsent(_, df.schema))
+        df
+    }
+  }
+
+  /** The schema [[apply]] reads `name` with (inferred at most once per key). */
+  def schema(spark: SparkSession, dir: String, name: String): StructType =
+    apply(spark, dir, name).schema
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

@@ -1320,17 +1320,22 @@ object Dedup extends QueryModule {
     passageOverlapOf(Tables.documents(s, dir))
 
   /** Distinct [[PassW]]-token passage-shingle digests per doc:
-    * (doc_id, carry..., gh). Row-local: one `shingles` call per document,
-    * `array_distinct` (the distinct-per-doc contract: within-doc
-    * repetition cannot inflate any downstream count), then one md5 per
-    * exploded shingle — no shuffle. Docs shorter than PassW tokens have no
-    * shingles and drop out.
+    * (doc_id, carry..., gh), plus the doc's distinct-shingle count
+    * `n_shingles` (bigint) on every row when `sized`. Row-local: one
+    * `shingles` call per document, `array_distinct` (the distinct-per-doc
+    * contract: within-doc repetition cannot inflate any downstream count),
+    * then one md5 per exploded shingle — no shuffle. Docs shorter than
+    * PassW tokens have no shingles and drop out.
     */
-  private def passageShingles(docs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
-    val keep = col("doc_id") +: carry.map(col)
+  private def passageShingles(docs: DataFrame, carry: Seq[String] = Nil,
+      sized: Boolean = false): DataFrame = {
+    val keep = (col("doc_id") +: carry.map(col)) ++
+      (if (sized) Seq(col("n_shingles")) else Nil)
     docs
-      .select(keep :+ explode(array_distinct(
-        Shingles(docs.sparkSession, TextOps.tokens(col("text")), PassW))).as("sh"): _*)
+      .withColumn("sh", array_distinct(
+        Shingles(docs.sparkSession, TextOps.tokens(col("text")), PassW)))
+      .withColumn("n_shingles", size(col("sh")).cast("long"))
+      .select(keep :+ explode(col("sh")).as("sh"): _*)
       .select(keep :+ md5(col("sh")).as("gh"): _*)
   }
 
@@ -1432,7 +1437,7 @@ object Dedup extends QueryModule {
     */
   def bloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
     graft.functions.BloomFuncs.register(s)
-    val g = passageShingles(Tables.documents(s, dir), carry = Seq("source"))
+    val g = passageShingles(Tables.documents(s, dir), carry = Seq("source"), sized = true)
       .withColumn("is_bench", col("source").isin(BenchSources: _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // benchSet feeds the bloom build AND the exact verify side
@@ -1451,13 +1456,12 @@ object Dedup extends QueryModule {
     benchSet
       .agg(expr(s"bloom_agg(xxhash64(gh), ${BloomItems}L, ${BloomBits}L)").as("bf"))
       .createOrReplaceTempView(bloomView)
-    val train = g.filter(!col("is_bench"))
-    val totals = train.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-    val hits = train
+    // each row carries its doc's shingle total, so only hits are grouped:
+    // clean docs drop, mirroring >= 1
+    val out = g.filter(!col("is_bench"))
       .filter(expr(s"bloom_might_contain((SELECT bf FROM $bloomView), xxhash64(gh))"))
       .join(benchSet, Seq("gh"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
-    val out = totals.join(hits, "doc_id") // inner: clean docs drop, mirroring >= 1
+      .groupBy("doc_id", "n_shingles").agg(count(lit(1)).as("n_contaminated"))
       .withColumn("contam_frac",
         round(col("n_contaminated").cast("double") / col("n_shingles"), 6))
       .select("doc_id", "n_shingles", "n_contaminated", "contam_frac")
@@ -1486,19 +1490,17 @@ object Dedup extends QueryModule {
     * containment; boilerplate phrases shared by millions of docs
     * contribute neither pairs nor counts, and the per-shingle join
     * fan-out is ≤ DfCap²). All shuffles carry 32-byte digests or
-    * (doc_a, doc_b) pairs; per-doc sizes ride a window over the already-
-    * partitioned digest rows; no array materialization at all —
-    * intersection sizes are counted relationally.
+    * (doc_a, doc_b) pairs; per-doc sizes are counted in the map and ride
+    * every digest row; intersection sizes are counted relationally.
     */
   def containment(s: SparkSession, dir: String): DataFrame =
     containmentOf(Tables.documents(s, dir))
 
   private[graft] def containmentOf(docs: DataFrame): DataFrame = {
     // persist AFTER the df filter: the frame feeds both self-join sides, so
-    // caching the filtered rows runs the shingle pipeline and both windows
+    // caching the filtered rows runs the shingle pipeline and the df window
     // once and the cache holds only the rare-shingle survivors
-    val rare = passageShingles(docs)
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
+    val rare = passageShingles(docs, sized = true)
       .withColumn("df", count(lit(1)).over(Window.partitionBy("gh")))
       .filter(col("df").between(2, DfCap))
       .drop("df")
@@ -1506,7 +1508,7 @@ object Dedup extends QueryModule {
     val out = rare.as("a").join(rare.as("b"),
         col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.n").as("na"), col("b.n").as("nb"))
+        col("a.n_shingles").as("na"), col("b.n_shingles").as("nb"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("inter"), max("na").as("na"), max("nb").as("nb"))
       .withColumn("containment",

@@ -177,7 +177,7 @@ object Streaming {
     */
   def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schema(s, dir, "events")
     graft.Tables.normalizeTs(
       s.readStream
         .schema(schema)
@@ -190,7 +190,7 @@ object Streaming {
     * in incrementally — the ingest path of a continuously-crawled corpus.
     */
   def documentsStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.schema(s, dir, "documents")
     s.readStream
       .schema(schema)
       .option("pathGlobFilter", "documents.parquet")
@@ -201,7 +201,7 @@ object Streaming {
     * [[eventsStream]]) — the fact-feed half of a streaming metrics store.
     */
   def lineitemStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
+    val schema = graft.Tables.schema(s, dir, "lineitem")
     s.readStream
       .schema(schema)
       .option("pathGlobFilter", "lineitem.parquet")
@@ -213,7 +213,7 @@ object Streaming {
     * maintains itself from.
     */
   def ordersStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/orders.parquet").schema
+    val schema = graft.Tables.schema(s, dir, "orders")
     s.readStream
       .schema(schema)
       .option("pathGlobFilter", "orders.parquet")

@@ -204,7 +204,7 @@ object ClusterCheck {
     }
     def timeAll(spark: SparkSession): (Map[String, Double], Map[String, String]) = {
       // untimed warmup (session JIT / codegen)
-      spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name")
+      graft.Tables.region(spark, sfDir).groupBy("r_name")
         .count().write.format("noop").mode("overwrite").save()
       val acc = scala.collection.mutable.Map.empty[String, Double]
       val errs = scala.collection.mutable.Map.empty[String, String]

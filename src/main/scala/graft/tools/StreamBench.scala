@@ -106,14 +106,14 @@ object StreamBench {
     // the production shape: the persisted corpus index does not grow with
     // one batch's arriving volume
     val snapshotDir = legs.head._2
-    val snapshotDocs = spark.read.parquet(s"$snapshotDir/documents.parquet")
+    val snapshotDocs = graft.Tables.documents(spark, snapshotDir)
 
     val docsSource = (dir: String) =>
-      spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val docsFullSource = (dir: String) =>
-      spark.read.parquet(s"$dir/documents.parquet")
+      graft.Tables.documents(spark, dir)
     val ordersSource = (dir: String) =>
-      spark.read.parquet(s"$dir/orders.parquet")
+      graft.Tables.orders(spark, dir)
 
     val queries: Seq[(String, String => DataFrame, (String, DataFrame) => DataFrame, String)] = Seq(
       ("phashKeepViaState", docsSource,
@@ -124,8 +124,8 @@ object StreamBench {
         "append"),
       ("mvViewStreaming", ordersSource,
         (dir, s) => graft.streaming.Streaming.mvViewStreaming(s,
-          spark.read.parquet(s"$dir/customer.parquet"),
-          spark.read.parquet(s"$dir/nation.parquet")),
+          graft.Tables.customer(spark, dir),
+          graft.Tables.nation(spark, dir)),
         "complete"))
 
     val qJsons = queries.map { case (name, source, build, mode) =>

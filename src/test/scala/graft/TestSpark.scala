@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (sessions are ~seconds to
@@ -19,4 +22,19 @@ object TestSpark {
     "spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s"))
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs started on the shared session while `body` runs. */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      body
+      // job-start events ride the async listener bus
+      Local.drainBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(counter)
+    jobs.get
+  }
 }
