@@ -69,30 +69,18 @@ object Bench {
     val classesStamp0 = try classesFingerprint() catch { case _: Exception => 0L }
     // FOOTPRINT TELEMETRY — the r15 lesson: the factor-100 failure mode was
     // disk exhaustion (dd_ngram_jaccard filled 80 GB of shuffle spill), not
-    // wall-time, and exponents can't see it. Every stage's aggregated task
-    // metrics accumulate here; per query the delta across its timed window
-    // (max across passes) lands in the full JSON as query_shuffle_mb /
-    // query_spill_mb, so a footprint regression is a diffable artifact.
-    val shuffleAcc = new java.util.concurrent.atomic.AtomicLong
-    val spillAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleAcc.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spillAcc.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      }
-    })
-    val shuffleMb = scala.collection.mutable.Map.empty[String, Double]
-      .withDefaultValue(0.0)
-    val spillMb = scala.collection.mutable.Map.empty[String, Double]
-      .withDefaultValue(0.0)
+    // wall-time, and exponents can't see it. Every pass of every query is
+    // one Local.profile record; its per-stage shuffle-write and spill sums
+    // (max across passes) land in the full JSON as query_shuffle_mb /
+    // query_spill_mb, so a footprint regression is a diffable artifact, and
+    // its job count and driver gap per pass as query_jobs /
+    // query_driver_gap_s.
+    val profiles = scala.collection.mutable.Map.empty[String, Vector[Local.Profile]]
+      .withDefaultValue(Vector.empty)
     // Janino compilations per query per pass (query_codegen_compiles):
     // Spark's codegen cache holds 100 entries, so a suite that generates
     // more recompiles in EVERY pass — cache thrash, visible as data.
-    // Read outside t0..t1, like the shuffle/spill counters.
+    // Read outside the profiled region.
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val codegenCompiles = scala.collection.mutable.Map.empty[String, Vector[Long]]
       .withDefaultValue(Vector.empty)
@@ -101,14 +89,11 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
-      .withDefaultValue(Vector.empty)
     // which half of its pass each sample ran in (0 = before the middle
     // sentinel, 1 = after) — the key for reading a sample against the
     // sentinel level of its own contention window
     val winIdx = scala.collection.mutable.Map.empty[String, Vector[Int]]
       .withDefaultValue(Vector.empty)
-    val errors = scala.collection.mutable.Map.empty[String, String]
     // SENTINEL: a fixed window+two-shuffle aggregate over GENERATED rows,
     // timed at the start / middle / end of every pass. Its workload never
     // changes — and since r15 it reads no table at all (spark.range), so
@@ -161,23 +146,12 @@ object Bench {
         // queries run last (measured: txt_term_freq 3.3 s polluted vs
         // 0.50 s clean). The sweep makes every sample a cold-cache run.
         Local.sweep(spark)
-        // stage-completed events ride the async listener bus: drain it
-        // before reading the counters
-        Local.drainBus(spark.sparkContext)
-        val (sh0, sp0, cg0) = (shuffleAcc.get(), spillAcc.get(), compiles.getCount)
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          errors.getOrElseUpdate(name,
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+        val cg0 = compiles.getCount
+        val p = Local.profile(spark) {
+          SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         }
-        samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
+        profiles(name) = profiles(name) :+ p
         codegenCompiles(name) = codegenCompiles(name) :+ (compiles.getCount - cg0)
-        Local.drainBus(spark.sparkContext)
-        shuffleMb(name) = math.max(shuffleMb(name),
-          (shuffleAcc.get() - sh0) / 1048576.0)
-        spillMb(name) = math.max(spillMb(name),
-          (spillAcc.get() - sp0) / 1048576.0)
         winIdx(name) = winIdx(name) :+
           (if (order.size >= 2 && i >= order.size / 2) 1 else 0)
       }
@@ -185,7 +159,9 @@ object Bench {
       sentinels += sent.toVector
     }
     // a query that failed ANY pass is reported as an error, not a timing
-    val results = names.map(n => (n, samples(n), errors.get(n)))
+    val results = names.map { n =>
+      (n, profiles(n).map(_.seconds), profiles(n).flatMap(_.failure).headOption)
+    }
     val ok = results.filter(_._3.isEmpty)
     // 0.1 ms precision: full-precision doubles ×63 queries ×N samples made the
     // round-4 stdout line 5.2 KB — past the driver's tail-capture window, so
@@ -294,13 +270,14 @@ object Bench {
       .map { case (k, m) => s"${jstr(k)}:${jstr(m.take(80))}" }.mkString("{", ",", "}")
     val compact =
       s"""{"metric":"total",$core,"errors":$errsCompact,"queries":$slowest,"queries_truncated":true,"full_out":${jstr(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))}}"""
-    val qsShuffle = ok.map { case (k, _, _) => s"${jstr(k)}:${r4(shuffleMb(k))}" }
-      .mkString("{", ",", "}")
-    val qsSpill = ok.map { case (k, _, _) => s"${jstr(k)}:${r4(spillMb(k))}" }
-      .mkString("{", ",", "}")
-    val qsCompiles = ok.map { case (k, _, _) => s"${jstr(k)}:${codegenCompiles(k).mkString("[", ",", "]")}" }
-      .mkString("{", ",", "}")
-    val full = s"""{"metric":"total",$core,"queries":$qs,"errors":$errs,"sentinel":$sentJson,"samples":$samplesJson,"queries_calibrated":$qsCal,"query_sentinel_ratio":$qsRatio,"query_shuffle_mb":$qsShuffle,"query_spill_mb":$qsSpill,"query_codegen_compiles":$qsCompiles}"""
+    def perQuery(f: String => Any) =
+      ok.map { case (k, _, _) => s"${jstr(k)}:${f(k)}" }.mkString("{", ",", "}")
+    val qsShuffle = perQuery(k => r4(profiles(k).map(_.shuffleMb).max))
+    val qsSpill = perQuery(k => r4(profiles(k).map(_.spillMb).max))
+    val qsCompiles = perQuery(codegenCompiles(_).mkString("[", ",", "]"))
+    val qsJobs = perQuery(profiles(_).map(_.jobs.size).mkString("[", ",", "]"))
+    val qsGap = perQuery(profiles(_).map(_.gapMs / 1000.0).mkString("[", ",", "]"))
+    val full = s"""{"metric":"total",$core,"queries":$qs,"errors":$errs,"sentinel":$sentJson,"samples":$samplesJson,"queries_calibrated":$qsCal,"query_sentinel_ratio":$qsRatio,"query_shuffle_mb":$qsShuffle,"query_spill_mb":$qsSpill,"query_codegen_compiles":$qsCompiles,"query_jobs":$qsJobs,"query_driver_gap_s":$qsGap}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     Files.writeString(Paths.get(outFile), full + "\n")
     println(compact)

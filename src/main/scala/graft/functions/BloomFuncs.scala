@@ -23,20 +23,18 @@ object BloomFuncs {
   private val mightInfo =
     new ExpressionInfo(classOf[BloomFilterMightContain].getName, "bloom_might_contain")
 
-  private[functions] val aggBuilder = (children: Seq[Expression]) => {
+  private val aggBuilder = (children: Seq[Expression]) => {
     require(children.size == 3,
       "bloom_agg(xxhash64_key, est_items, num_bits) takes 3 arguments")
     new BloomFilterAggregate(children(0), children(1), children(2))
   }
-  private[functions] val mightBuilder = (children: Seq[Expression]) => {
+  private val mightBuilder = (children: Seq[Expression]) => {
     require(children.size == 2,
       "bloom_might_contain(bloom, xxhash64_key) takes 2 arguments")
     BloomFilterMightContain(children(0), children(1))
   }
 
-  /** Register both functions in an existing session (idempotent) — for
-    * sessions not built through [[GraftExtensions]].
-    */
+  /** Register both functions in a session (idempotent). */
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("bloom_agg"), aggInfo, aggBuilder)

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -71,49 +70,8 @@ object RollingHash {
     RollingHash(children.head, DefaultBase, DefaultMod)
   }
 
-  /** Register `rolling_hash(str)` in an existing session (idempotent) — for
-    * sessions not built through [[GraftExtensions]].
-    */
+  /** Register `rolling_hash(str)` in a session (idempotent). */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("rolling_hash"), info, builder)
-}
-
-/** SparkSessionExtensions hook — the supported wiring for custom Catalyst
-  * work: `SparkSession.builder().withExtensions(GraftExtensions)` (or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (children: Seq[Expression]) =>
-        RollingHash(children.head, RollingHash.DefaultBase, RollingHash.DefaultMod)))
-    e.injectFunction((FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "ngram_hashes(text, n) takes 2 arguments")
-        require(children(1).foldable,
-          "ngram_hashes window size must be a literal")
-        val n = children(1).eval().asInstanceOf[Number].intValue
-        NgramHashes(children.head, n,
-          NgramHashes.DefaultBase1, NgramHashes.DefaultBase2, NgramHashes.DefaultMod)
-      }))
-    e.injectFunction((FunctionIdentifier("ahash_sig"),
-      new ExpressionInfo(classOf[AhashSig].getName, "ahash_sig"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "ahash_sig takes exactly one argument")
-        AhashSig(children.head)
-      }))
-    e.injectFunction((FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_agg"),
-      BloomFuncs.aggBuilder))
-    e.injectFunction((FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_might_contain"),
-      BloomFuncs.mightBuilder))
-  }
 }

@@ -51,17 +51,22 @@ object Dedup extends QueryModule {
 
   /** The null-guarded md5 token-stream fingerprint over a projected `toks`
     * column — THE exact fingerprint every exact tier shares. Empty docs
-    * fingerprint to NULL (not md5 of ""), so equality joins drop them while
-    * window partitioning groups them — both engines agree on both.
+    * fingerprint to NULL (not md5 of ""), matching the oracle's
+    * string_agg-of-empty-list NULL, so equality joins drop them while
+    * window partitioning groups them — both engines agree on both. `<= 0`
+    * also covers NULL text, where size() returns -1 under legacy
+    * sizeOfNull. `toks` is its own projection: HOFs get no CSE, so the
+    * double reference inside the guard would otherwise tokenize every row
+    * twice.
     */
   private[graft] def fpExpr: Column =
     when(size(col("toks")) <= 0, lit(null))
       .otherwise(md5(concat_ws(" ", col("toks")))).as("fp")
 
   /** docs(doc_id, text, …) → (doc_id, fp) via [[fpExpr]] — shared by
-    * exactDedup, leakageSplit, incrementalDedup, neardupIngest and (as
-    * [[fpExpr]] directly, to keep `text` for the shingle branch) the
-    * streaming ingest twin.
+    * exactDedup, leakageSplit, incrementalDedup, neardupIngest and
+    * txt_fingerprint; the streaming twins use [[fpExpr]] directly, to
+    * keep `text` for the shingle branch or an arrival time beside it.
     */
   private[graft] def fingerprinted(documents: DataFrame): DataFrame =
     documents

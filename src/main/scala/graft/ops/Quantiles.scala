@@ -177,15 +177,7 @@ object Quantiles {
     val aggs = ps.zipWithIndex.map { case ((name, _), i) =>
       max(when(col("__qi") === i, col("__qv"))).as(name)
     }
-    val out = wide.groupBy(g: _*).agg(aggs.head, aggs.tail: _*)
-    // Materialize the bounded result, then drop the internal caches (the
-    // corpus-scale vals projection and the tiny materialized cells frame)
-    // — Dedup.materializeThenRelease inlined to avoid a cyclic module
-    // dependency.
-    val fin = out.persist(MEMORY_AND_DISK)
-    fin.count()
-    vals.unpersist(false)
-    cells.unpersist(false)
-    fin
+    Dedup.materializeThenRelease(wide.groupBy(g: _*).agg(aggs.head, aggs.tail: _*),
+      vals, cells)
   }
 }

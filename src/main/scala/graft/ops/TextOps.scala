@@ -442,20 +442,10 @@ object TextOps extends QueryModule {
   /** md5 fingerprint of the normalized token stream per document, plus how
     * many documents share that fingerprint (exact-dup group size).
     */
-  def fingerprints(s: SparkSession, dir: String): DataFrame = {
-    // Zero-token docs → null fp, matching the oracle's string_agg-of-empty-
-    // list NULL (md5(NULL) = NULL) instead of Spark's md5(''). `<= 0` also
-    // covers NULL text, where size() returns -1 under legacy sizeOfNull.
-    // toks is its own projection: HOFs get no CSE, so the double reference
-    // inside the guard would otherwise tokenize every row twice.
-    val fp = Tables.documents(s, dir)
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        when(size(col("toks")) <= 0, lit(null))
-          .otherwise(md5(concat_ws(" ", col("toks")))).as("fp"))
-    fp.withColumn("n_same", count(lit(1)).over(Window.partitionBy("fp")))
+  def fingerprints(s: SparkSession, dir: String): DataFrame =
+    Dedup.fingerprinted(Tables.documents(s, dir))
+      .withColumn("n_same", count(lit(1)).over(Window.partitionBy("fp")))
       .orderBy("doc_id")
-  }
 
   /** Top-3 terms per document by TF-IDF, with a DIVISION-ONLY idf:
     * score = tf · (N / df). Rationale: `ln()` is not bit-reproducible

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.Shingles
-import graft.ops.Streamish
+import graft.ops.{Dedup, Streamish}
 
 /** Running per-user totals — the state carried by [[Streaming.runningUserTotals]]. */
 final case class UserTotals(user_id: Long, n_events: Long, sum_value: Double)
@@ -289,10 +289,8 @@ object Streaming {
     */
   def dedupByFingerprint(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), graft.ops.TextOps.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        when(size(col("toks")) <= 0, lit(null))
-          .otherwise(md5(concat_ws(" ", col("toks")))).as("fp"),
+      .select(col("doc_id"), Dedup.toks.as("toks"))
+      .select(col("doc_id"), Dedup.fpExpr,
         // +1 day: a synthesized arrival of exactly epoch 0 (doc_id 0) is
         // ≤ the stream's initial watermark and would be discarded as late
         timestamp_seconds(col("doc_id") + lit(86400)).as("arrival"))
@@ -312,19 +310,15 @@ object Streaming {
     * fingerprint state — the batch semantics exactly.
     */
   def incrementalNewDocs(s: SparkSession, dir: String, docs: DataFrame): DataFrame = {
-    val toksS = graft.ops.TextOps.tokens(col("text"))
     val snapshot = graft.Tables.documents(s, dir)
       .filter(col("doc_id") % 2 === 0)
-      .select(toksS.as("toks"))
-      .select(when(size(col("toks")) <= 0, lit(null))
-        .otherwise(md5(concat_ws(" ", col("toks")))).as("snap_fp"))
+      .select(Dedup.toks.as("toks"))
+      .select(Dedup.fpExpr.as("snap_fp"))
       .filter(col("snap_fp").isNotNull).distinct()
     docs
       .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), toksS.as("toks"))
-      .select(col("doc_id"),
-        when(size(col("toks")) <= 0, lit(null))
-          .otherwise(md5(concat_ws(" ", col("toks")))).as("fp"),
+      .select(col("doc_id"), Dedup.toks.as("toks"))
+      .select(col("doc_id"), Dedup.fpExpr,
         timestamp_seconds(col("doc_id") + lit(86400)).as("arrival"))
       .join(broadcast(snapshot), col("fp") === col("snap_fp"), "left_anti")
       .withWatermark("arrival", "1 hour")

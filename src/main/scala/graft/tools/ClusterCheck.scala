@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
@@ -116,40 +115,38 @@ object ClusterCheck {
       Thread.sleep(200)
     require(sc.getExecutorMemoryStatus.size >= 3, "executors never registered")
 
-    @volatile var jobsEnded = 0
-    @volatile var executorsLost = 0
-    sc.addSparkListener(new SparkListener {
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobsEnded += 1
-      override def onExecutorRemoved(
-          e: org.apache.spark.scheduler.SparkListenerExecutorRemoved): Unit =
-        executorsLost += 1
-    })
+    val rec = new graft.Local.Recorder
     @volatile var killedPid: Option[Long] = None
     @volatile var killedAtJob = -1
     val killer = new Thread(() => {
       // let propagation get underway (edge persist + initial labels + at
       // least one round land as completed jobs), THEN pull the plug
       val dl = System.nanoTime() + 300L * 1000 * 1000 * 1000
-      while (jobsEnded < 3 && System.nanoTime() < dl) Thread.sleep(50)
-      killedAtJob = jobsEnded
+      while (rec.jobsEnded < 3 && System.nanoTime() < dl) Thread.sleep(50)
+      killedAtJob = rec.jobsEnded
       killedPid = killOneExecutor(sc.applicationId)
     })
     killer.setDaemon(true)
     killer.start()
-    val t0 = System.nanoTime()
-    val (gotRows, gotHash) = digest(graft.SparkEntry.queries("dd_cluster")(spark, sfDir))
-    val sec = (System.nanoTime() - t0) / 1e9
+    var got = (0L, "")
+    val run = graft.Local.profile(spark, rec) {
+      got = digest(graft.SparkEntry.queries("dd_cluster")(spark, sfDir))
+      // give the scheduler a beat to surface the removal event, which the
+      // recorder only sees while attached
+      val lostDl = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (rec.executorsRemoved < 1 && System.nanoTime() < lostDl) Thread.sleep(100)
+    }
+    run.error.foreach(e => throw e)
     killer.join(10000)
-    // give the scheduler a beat to surface the removal event before we read it
-    val lostDl = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (executorsLost < 1 && System.nanoTime() < lostDl) Thread.sleep(100)
+    val (gotRows, gotHash) = got
+    val executorsLost = run.executorsRemoved
     val killedDuring = killedPid.isDefined && killedAtJob >= 3 && executorsLost >= 1
     spark.stop()
     s""""kill":{"ok":${gotHash == refHash && killedDuring},"rows":$gotRows,""" +
       s""""rows_ref":$refRows,"hash_match":${gotHash == refHash},""" +
       s""""killed_pid":${killedPid.getOrElse(-1L)},"killed_after_jobs":$killedAtJob,""" +
       s""""executors_lost":$executorsLost,""" +
-      s""""seconds":${math.rint(sec * 100) / 100},"checkpoint_dir":${jstr(ckDir)}}"""
+      s""""seconds":${math.rint(run.seconds * 100) / 100},"checkpoint_dir":${jstr(ckDir)}}"""
   }
 
   /** AQE skew-split under real network shuffle: one hot key carrying ~25 %
@@ -210,15 +207,13 @@ object ClusterCheck {
       val errs = scala.collection.mutable.Map.empty[String, String]
       for (pass <- 1 to reps; name <- if (pass % 2 == 1) names else names.reverse) {
         graft.Local.sweep(spark)
-        val t0 = System.nanoTime()
-        try {
+        val p = graft.Local.profile(spark) {
           graft.SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
-          val s = (System.nanoTime() - t0) / 1e9
-          acc(name) = math.min(acc.getOrElse(name, Double.MaxValue), s)
-        } catch {
-          case e: Exception =>
-            errs(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
+        }
+        p.failure match {
+          case Some(e) => errs(name) = e
+          case None => acc(name) = math.min(acc.getOrElse(name, Double.MaxValue), p.seconds)
         }
       }
       (acc.toMap, errs.toMap)

@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tools.Probe.{driverGap, median}
+import graft.Local.driverGap
+import graft.tools.Probe.median
 
 /** The probe's driver gap (wall time in [t0, t1] that no job span covers)
   * and the median its closing line reports.

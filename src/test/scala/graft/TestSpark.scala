@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (sessions are ~seconds to
@@ -23,18 +20,12 @@ object TestSpark {
 
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Spark jobs started on the shared session while `body` runs. */
+  /** Spark jobs started on the shared session while `body` runs; an error
+    * from `body` is rethrown.
+    */
   def jobsOf(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      body
-      // job-start events ride the async listener bus
-      Local.drainBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(counter)
-    jobs.get
+    val p = Local.profile(spark)(body)
+    p.error.foreach(e => throw e)
+    p.jobs.size
   }
 }
